@@ -8,7 +8,10 @@ Scale design:
   explode shingles → self-join on shingle → per-pair common counts. At 100TB
   add a document-frequency cut (drop shingles appearing in >df_max docs) —
   exposed as ``max_shingle_df``.
-- MinHash+LSH: k permutations via (a*x+b) mod p over xxhash64 shingles —
+- One gram hash (``gram_hashes``: xxhash64 of words, then of word-hash
+  n-tuples) feeds MinHash, SimHash, Bloom and the hashed-feature models;
+  the DuckDB oracles replay it bit for bit.
+- MinHash+LSH: k permutations via (a*x+b) mod p over the gram hashes —
   pure column expressions; bands are arrays sliced from the signature; the
   candidate join is an equi-join on (band_idx, band_hash) — exactly the
   banding scheme from the MMDS literature.
@@ -18,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Callable
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -51,17 +54,10 @@ def release_persisted() -> None:
             pass
 
 
-def md5_hash60(col: Column) -> Column:
-    """60-bit positive gram hash from md5 — slower than xxhash64 but exactly
-    reproducible in DuckDB (``('0x'||substr(md5(g),1,15))::BIGINT``), used by
-    the oracle-paired query variants. Production default stays xxhash64."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def shingles(col: Column, n: int = 3) -> Column:
     """Word n-gram shingles (distinct) as an array<string>.
 
-    Same arrays_zip-of-shifted-slices shape as hashed_shingles below (and
+    Same arrays_zip-of-shifted-slices shape as gram_hashes below (and
     for the same reason): slicing ``ws`` inside a transform lambda would
     recompute the whole split per gram — O(words²) per doc."""
     ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
@@ -73,14 +69,13 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array()))
 
 
-def hashed_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram hashes as array<long> WITHOUT materializing the
-    shingle strings: hash each word once, then xxhash64 over the n
-    consecutive word hashes per position. Equivalent as a MinHash/SimHash
-    gram universe to hashing the joined strings (any 64-bit gram id works),
-    but allocation-free — no per-position slice/join strings, and the
-    distinct runs over primitive longs. This is the production gram path;
-    the string form stays for the md5 oracle-replay twins.
+def gram_hashes(ws: Column, ns: Sequence[int]) -> Column:
+    """array<long>: the hash of every word n-gram of the word array ``ws``,
+    for each n in ``ns`` (concatenated in ``ns`` order, each in word order,
+    duplicates kept). The one gram hash of the package: a word hashes as
+    ``xxhash64(w)``, an n-gram (n >= 2) as ``xxhash64`` over its n word
+    hashes — no gram string is ever built. DuckDB oracles replay it with
+    ``sources.sql_oracle.xxhash64_str_sql``/``xxhash64_longs_sql``.
 
     Shape matters: the n-gram window is built by arrays_zip of n SHIFTED
     SLICES of the word-hash array, so ``wh`` appears exactly n times per
@@ -89,14 +84,32 @@ def hashed_shingles(col: Column, n: int = 3) -> Column:
     not common-subexpression-eliminate inside higher-order functions — the
     word-hash array is recomputed per element access, O(words²) per doc
     (measured 44s vs 2.5s on 200k docs)."""
-    ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
     wh = F.transform(ws, lambda w: F.xxhash64(w))
     sz = F.size(wh)
-    zipped = F.arrays_zip(*[F.slice(wh, 1 + k, sz - (n - 1)) for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.xxhash64(*[s[str(k)] for k in range(n)])
-    )
-    return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array()))
+    parts = []
+    for n in ns:
+        if n == 1:
+            parts.append(wh)
+            continue
+        zipped = F.arrays_zip(*[F.slice(wh, 1 + k, sz - (n - 1)) for k in range(n)])
+        grams = F.transform(
+            zipped, lambda s: F.xxhash64(*[s[str(k)] for k in range(n)])
+        )
+        parts.append(F.when(sz >= n, grams).otherwise(F.array().cast("array<bigint>")))
+    return F.concat(*parts) if len(parts) > 1 else parts[0]
+
+
+def hash_bucket(h: Column, n_buckets: int) -> Column:
+    """A gram hash's bucket in [0, n_buckets): Spark's ``pmod``
+    (``sources.sql_oracle.pmod_sql`` in DuckDB)."""
+    return F.pmod(h, F.lit(n_buckets))
+
+
+def hashed_shingles(col: Column, n: int = 3) -> Column:
+    """Distinct lower-cased word n-gram hashes (``gram_hashes``) as
+    array<long> — the MinHash/SimHash gram universe."""
+    ws = F.filter(F.split(F.lower(col), r"\s+"), lambda w: w != "")
+    return F.array_distinct(gram_hashes(ws, (n,)))
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -189,37 +202,24 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
     """MinHash + LSH banding: candidate pairs that share at least one band.
     Returns (id_a, id_b, est_jaccard) where est_jaccard = fraction of equal
-    signature positions (the MinHash estimate). ``gram_hash`` maps a shingle
-    to a non-negative-ish long (default xxhash64 — fastest; pass
-    ``md5_hash60`` for cross-engine-reproducible signatures).
+    signature positions (the MinHash estimate) over ``hashed_shingles``.
 
     No upfront repartition: shingle+hash runs on the scan partitions, and
     the signature groupBy's map-side combine means the only doc-count-sized
     shuffle moves (id, k longs) rows — never the text."""
-    grams = _gram_hashes(df, text_col, id_col, n, gram_hash)
+    grams = _shingle_relation(df, text_col, id_col, n)
     return minhash_lsh_from_gram_hashes(grams, num_hashes, bands, seed)
 
 
-def _gram_hashes(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    gram_hash: Callable[[Column], Column],
-) -> DataFrame:
-    """(id, gh:array<long>) shingle-hash relation — the single dispatch
-    point for the gram hash, shared by the self-join dedup path and the
-    cross-corpus decontamination path so their signatures can never
-    diverge. xxhash64 takes the string-free fast path."""
-    if gram_hash is F.xxhash64:
-        gh = hashed_shingles(F.col(text_col), n)
-    else:
-        gh = F.transform(shingles(F.col(text_col), n), lambda g: gram_hash(g))
-    return df.select(F.col(id_col).alias("id"), gh.alias("gh"))
+def _shingle_relation(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, gh:array<long>) ``hashed_shingles`` relation, shared by the
+    self-join dedup path and the cross-corpus decontamination path."""
+    return df.select(
+        F.col(id_col).alias("id"), hashed_shingles(F.col(text_col), n).alias("gh")
+    )
 
 
 def minhash_signatures(
@@ -334,7 +334,6 @@ def minhash_cross_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
     """Fuzzy benchmark decontamination: MinHash+LSH candidates BETWEEN a
     training corpus and a benchmark relation (the near-dup counterpart to
@@ -357,10 +356,10 @@ def minhash_cross_candidates(
         raise ValueError("num_hashes must be divisible by bands")
     rpb = num_hashes // bands
     sig_c = _track_persist(minhash_signatures(
-        _gram_hashes(corpus, text_col, id_col, n, gram_hash), num_hashes, seed
+        _shingle_relation(corpus, text_col, id_col, n), num_hashes, seed
     ))
     sig_b = _track_persist(minhash_signatures(
-        _gram_hashes(bench, text_col, id_col, n, gram_hash), num_hashes, seed
+        _shingle_relation(bench, text_col, id_col, n), num_hashes, seed
     ))
     banded_c = _banded_keys(sig_c, bands, rpb)
     banded_b = _banded_keys(sig_b, bands, rpb)
@@ -465,7 +464,6 @@ def simhash_near_dups(
     n: int = 2,
     max_hamming: int = 3,
     prefix_bits: int = 16,
-    gram_hash: Callable[[Column], Column] = F.xxhash64,
     n_rotations: int = 1,
 ) -> DataFrame:
     """SimHash near-dup pairs: bucket on a ``prefix_bits``-wide block of the
@@ -484,13 +482,9 @@ def simhash_near_dups(
     bit-count rows, never the text."""
     if n_rotations < 1 or n_rotations * prefix_bits > 64:
         raise ValueError("need 1 <= n_rotations and n_rotations*prefix_bits <= 64")
-    if gram_hash is F.xxhash64:
-        gh = hashed_shingles(F.col(text_col), n)  # string-free fast path
-    else:
-        gh = F.transform(shingles(F.col(text_col), n), lambda g: gram_hash(g))
-    grams = df.select(F.col(id_col).alias("id"), gh.alias("gram_hashes"))
     # persisted for the same two-sided self-join reason as the MinHash path
-    sig = _track_persist(simhash_signatures(grams, "gram_hashes"))
+    grams = _shingle_relation(df, text_col, id_col, n)
+    sig = _track_persist(simhash_signatures(grams, "gh"))
     mask = (1 << prefix_bits) - 1
     blocks = F.array(
         *[

@@ -13,6 +13,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from loongcollector_spark.functions.dedup import gram_hashes, hash_bucket
+from loongcollector_spark.functions.sampling import _md5_bucket
+
 # tiny marker-word sets for the n-gram/stopword language heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "is"),
@@ -422,11 +425,10 @@ def stratified_sample(
 
     Hash-gated, not random: reproducible across runs/engines, needs no seed
     state, and is a pure per-row filter — no shuffle, pushes past the scan at
-    100 TB. md5 (not xxhash64) so external engines can replay the exact
-    admit set (DuckDB: ('0x' || substr(md5(id),1,15))::BIGINT)."""
-    bucket = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long") % buckets
+    100 TB. The md5 id gate of ``functions.sampling``, so external engines
+    can replay the exact admit set (DuckDB:
+    ('0x' || substr(md5(id),1,15))::BIGINT)."""
+    bucket = _md5_bucket(F.col(id_col), buckets)
     rate: Column = F.lit(float(default_rate))
     for k in sorted(rates):  # deterministic plan
         rate = F.when(F.col(strata_col) == k, F.lit(float(rates[k]))).otherwise(rate)
@@ -441,47 +443,15 @@ def hashed_ngram_buckets(
     col: Column,
     n_buckets: int = 1024,
     ns: tuple[int, ...] = (1, 2),
-    hash: str = "md5",
 ) -> Column:
     """array<long>: every word n-gram (default unigrams + bigrams) hashed
     into [0, n_buckets) — the hashed feature space of DSIR (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling").
-
-    ``hash``: "md5" (default) so an external engine can replay the exact
-    buckets (DuckDB: ('0x' || substr(md5(g),1,15))::BIGINT % B) — the
-    oracle twin; "xxh64" is the production path (same shape, one codegen'd
-    streaming hash instead of a full cryptographic digest + hex/radix trip)
-    for corpus runs where nothing external replays the buckets."""
-    if hash not in ("md5", "xxh64"):
-        raise ValueError(f"hash must be 'md5' or 'xxh64', got {hash!r}")
-    ws = words(col)
-    sz = F.size(ws)
-
-    def _b(g: Column) -> Column:
-        if hash == "xxh64":
-            return F.pmod(F.xxhash64(g), F.lit(n_buckets)).cast("long")
-        return (
-            F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-            % n_buckets
-        )
-
-    # ws appears a CONSTANT number of times per row (transform arg + shifted
-    # slices) — never inside a lambda body, where Spark would recompute the
-    # whole split per gram (O(words²)/doc; see word_ngrams docstring)
-    def _ngram_part(n: int) -> Column:
-        # NB: a one-arg lambda only — pyspark materializes every lambda
-        # parameter (including defaults) as a higher-order-function variable
-        zipped = F.arrays_zip(
-            *[F.slice(ws, 1 + k, sz - (n - 1)) for k in range(n)]
-        )
-        grams = F.transform(
-            zipped,
-            lambda s: _b(F.concat_ws(" ", *[s[str(k)] for k in range(n)])),
-        )
-        return F.when(sz >= n, grams).otherwise(F.array().cast("array<long>"))
-
-    parts = [F.transform(ws, _b) if n == 1 else _ngram_part(n) for n in ns]
-    return F.concat(*parts) if len(parts) > 1 else parts[0]
+    Buckets are ``dedup.hash_bucket`` of ``dedup.gram_hashes``, which the
+    DuckDB oracles replay exactly."""
+    return F.transform(
+        gram_hashes(words(col), ns), lambda h: hash_bucket(h, n_buckets)
+    )
 
 
 def dsir_importance(
@@ -492,7 +462,6 @@ def dsir_importance(
     n_buckets: int = 1024,
     smoothing: float = 1.0,
     ns: tuple[int, ...] = (1, 2),
-    hash: str = "md5",
 ) -> DataFrame:
     """Per-document DSIR importance weight log p_target(x)/p_raw(x) under
     hashed n-gram bag-of-words models (Xie et al. 2023): the standard
@@ -514,12 +483,12 @@ def dsir_importance(
     crossJoin of the 1-row aggregate."""
     from loongcollector_spark.functions.dedup import _track_persist
 
-    # one md5 pass over the text, reused by the histogram and scoring scans
+    # one hash pass over the text, reused by the histogram and scoring scans
     feat = _track_persist(
         df.select(
             F.col(id_col),
             target.alias("__tgt__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns, hash).alias(
+            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
                 "__bs__"
             ),
         ).filter(F.size("__bs__") > 0)
@@ -580,15 +549,6 @@ def dsir_importance(
     )
 
 
-def _md5_bucket(g: Column, n_buckets: int) -> Column:
-    """md5-derived hash bucket in [0, n_buckets) — 15 hex chars < 2^63,
-    replayable in any engine (DuckDB:
-    ('0x' || substr(md5(g),1,15))::BIGINT % B)."""
-    return (
-        F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long") % n_buckets
-    )
-
-
 def _densify_counts(hist: DataFrame, n_slots: int, out: str) -> DataFrame:
     """(bucket `__b__`, count `__c__`) histogram → ONE row holding an
     n_slots-long array<double> indexed by bucket (0.0 for unseen buckets).
@@ -628,9 +588,10 @@ def lm_perplexity_buckets(
 
     The model is add-one-smoothed over hashed vocabularies (unigram contexts
     in [0, b_uni), bigrams in [0, b_big)) — the hashing trick bounds the
-    model to a broadcastable array pair regardless of corpus vocabulary, the
-    md5 bucket scheme keeps it replayable by external engines. Cross-entropy
-    per doc = -(1/n) Σᵢ ln( (c(w_i w_{i+1})+1) / (c(w_i)+b_big) ) in nats.
+    model to a broadcastable array pair regardless of corpus vocabulary, and
+    the buckets (``dedup.gram_hashes``) are replayable by external engines.
+    Cross-entropy per doc = -(1/n) Σᵢ ln( (c(w_i w_{i+1})+1) / (c(w_i)+b_big) )
+    in nats.
     Docs with fewer than two words drop out (no bigrams, no score).
 
     Tercile assignment does NOT globally sort: per-doc scores quantize to
@@ -650,26 +611,14 @@ def lm_perplexity_buckets(
     from loongcollector_spark.functions.dedup import _track_persist
 
     ws = words(F.col(text_col))
-    sz = F.size(ws)
-    # one md5 pass per word position, reused by training and scoring scans;
-    # ws appears a constant number of times per row (never inside a lambda
-    # body, where Spark would recompute the split per gram — see
-    # hashed_ngram_buckets)
-    first = F.slice(ws, 1, sz - 1)
-    second = F.slice(ws, 2, sz - 1)
-    zipped = F.arrays_zip(first, second)
+    # one hash pass per word position, reused by training and scoring scans
     feat = _track_persist(
         df.select(
             F.col(id_col),
             train.alias("__tr__"),
-            F.transform(ws, lambda w: _md5_bucket(w, b_uni)).alias("__u__"),
-            F.transform(
-                zipped,
-                lambda s: _md5_bucket(
-                    F.concat_ws(" ", s["0"], s["1"]), b_big
-                ),
-            ).alias("__g__"),
-        ).filter(sz >= 2)
+            hashed_ngram_buckets(F.col(text_col), b_uni, (1,)).alias("__u__"),
+            hashed_ngram_buckets(F.col(text_col), b_big, (2,)).alias("__g__"),
+        ).filter(F.size(ws) >= 2)
     )
 
     def _hist(arr_col: str) -> DataFrame:
@@ -949,7 +898,6 @@ def quality_classifier_logodds(
     ns: tuple[int, ...] = (1, 2),
     smoothing: float = 1.0,
     threshold: float = 0.0,
-    hash: str = "md5",
 ) -> DataFrame:
     """GPT-3 / LLaMA-style model-based quality gate (Brown et al. 2020
     App. A; Touvron et al. 2023 "classifying pages used as references in
@@ -971,9 +919,10 @@ def quality_classifier_logodds(
     bounded key space); the log-odds table densifies to ONE broadcast
     B-slot array, and scoring is a per-row F.aggregate fold with O(1)
     indexing — no (doc,bucket) shuffle, no per-row Python, no driver
-    collect. Deterministic and externally replayable: md5 buckets, and the
-    arithmetic is ln/div/mean only (DuckDB recomputes the identical score
-    to the ulp in practice; the keep threshold compares the raw double).
+    collect. Deterministic and externally replayable: gram-hash buckets
+    (``hashed_ngram_buckets``), and the arithmetic is ln/div/mean only
+    (DuckDB recomputes the identical score to the ulp in practice; the keep
+    threshold compares the raw double).
 
     Returns (id_col, n_grams:long, quality_logodds:double, keep:boolean).
 
@@ -988,7 +937,7 @@ def quality_classifier_logodds(
         df.select(
             F.col(id_col),
             positive.alias("__pos__"),
-            hashed_ngram_buckets(F.col(text_col), n_buckets, ns, hash).alias(
+            hashed_ngram_buckets(F.col(text_col), n_buckets, ns).alias(
                 "__bs__"
             ),
         ).filter(F.size("__bs__") > 0)

@@ -236,17 +236,9 @@ def run_pipeline(
     routed = compile_pipeline(df, spec, metrics)
 
     results: dict[str, Any] = {}
-    if spec.route_mode == "fanout":
-        per_sink = route.route_fanout(routed, spec.routes)
-    else:
+    cached = spec.route_mode != "fanout"
+    if cached:
         routed = routed.persist()
-        per_sink = {
-            r.sink: routed.filter(F.col(route.SINK_COLUMN) == r.sink) for r in spec.routes
-        }
-        if spec.default_sink and spec.default_sink not in per_sink:
-            per_sink[spec.default_sink] = routed.filter(
-                F.col(route.SINK_COLUMN) == spec.default_sink
-            )
 
     def deliver(sink_name: str, sink_df: DataFrame) -> Any:
         sink_spec = spec.sinks.get(sink_name)
@@ -260,49 +252,64 @@ def run_pipeline(
             )
         return write_sink(sink_df, sink_spec)
 
-    # checkpointed writes toggle session-level conf (partitionOverwriteMode)
-    # inside a context manager — not safe across concurrent driver threads
-    parallel_ok = parallel_sinks and not checkpoint and len(per_sink) > 1
-    if parallel_ok and spec.route_mode != "fanout":
-        routed.count()  # materialize the cache once before concurrent scans
-    if parallel_ok:
-        # The reference flushes every sink from its own runner thread
-        # (FlusherRunner); Spark's scheduler likewise accepts concurrent jobs
-        # from driver threads — each sink scans the cached routed parent, so
-        # the per-sink jobs overlap instead of running back-to-back.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(per_sink), 8)) as pool:
-            futures = {
-                name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
+    try:
+        if cached:
+            per_sink = {
+                r.sink: routed.filter(F.col(route.SINK_COLUMN) == r.sink) for r in spec.routes
             }
-            for name, fut in futures.items():
-                results[name] = fut.result()
-    else:
-        for sink_name, sink_df in per_sink.items():
-            results[sink_name] = deliver(sink_name, sink_df)
+            if spec.default_sink and spec.default_sink not in per_sink:
+                per_sink[spec.default_sink] = routed.filter(
+                    F.col(route.SINK_COLUMN) == spec.default_sink
+                )
+        else:
+            per_sink = route.route_fanout(routed, spec.routes)
 
-    # headline rollup: per (source, sink) rows/bytes/tokens, salted — exported
-    # as data, like the reference's self-monitoring metric records
-    # (pluginmanager/metric_export.go:40-62)
-    if spec.metrics_tokens_col and spec.route_mode == "first_match":
-        rollup = agg_ops.sink_metrics(
-            routed,
-            source_col=spec.metrics_source_col,
-            tokens_col=spec.metrics_tokens_col,
-        )
-        results["metrics_rollup"] = [r.asDict() for r in rollup.collect()]
-        if output_base is not None and results["metrics_rollup"]:
-            # empty-input pipelines produce an empty rollup; createDataFrame
-            # on [] cannot infer a schema and would fail the whole run AFTER
-            # every sink already delivered
-            spark = routed.sparkSession
-            spark.createDataFrame(results["metrics_rollup"]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{output_base}/_metrics")
+        # checkpointed writes toggle session-level conf (partitionOverwriteMode)
+        # inside a context manager — not safe across concurrent driver threads
+        parallel_ok = parallel_sinks and not checkpoint and len(per_sink) > 1
+        if parallel_ok and cached:
+            routed.count()  # materialize the cache once before concurrent scans
+        if parallel_ok:
+            # The reference flushes every sink from its own runner thread
+            # (FlusherRunner); Spark's scheduler likewise accepts concurrent jobs
+            # from driver threads — each sink scans the cached routed parent, so
+            # the per-sink jobs overlap instead of running back-to-back.
+            from concurrent.futures import ThreadPoolExecutor
 
-    results["elapsed_sec"] = time.time() - t0
-    results["stage_counters"] = metrics.export()
-    if spec.route_mode != "fanout":
-        routed.unpersist()
+            with ThreadPoolExecutor(max_workers=min(len(per_sink), 8)) as pool:
+                futures = {
+                    name: pool.submit(deliver, name, sdf) for name, sdf in per_sink.items()
+                }
+                for name, fut in futures.items():
+                    results[name] = fut.result()
+        else:
+            for sink_name, sink_df in per_sink.items():
+                results[sink_name] = deliver(sink_name, sink_df)
+
+        # headline rollup: per (source, sink) rows/bytes/tokens, salted — exported
+        # as data, like the reference's self-monitoring metric records
+        # (pluginmanager/metric_export.go:40-62)
+        if spec.metrics_tokens_col and spec.route_mode == "first_match":
+            rollup = agg_ops.sink_metrics(
+                routed,
+                source_col=spec.metrics_source_col,
+                tokens_col=spec.metrics_tokens_col,
+            )
+            results["metrics_rollup"] = [r.asDict() for r in rollup.collect()]
+            if output_base is not None and results["metrics_rollup"]:
+                # empty-input pipelines produce an empty rollup; createDataFrame
+                # on [] cannot infer a schema and would fail the whole run AFTER
+                # every sink already delivered
+                spark = routed.sparkSession
+                spark.createDataFrame(results["metrics_rollup"]).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(f"{output_base}/_metrics")
+
+        results["elapsed_sec"] = time.time() - t0
+        results["stage_counters"] = metrics.export()
+    finally:
+        # released on failure too: a failing sink must not leave the routed
+        # relation cached
+        if cached:
+            routed.unpersist()
     return results

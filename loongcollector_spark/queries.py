@@ -24,6 +24,12 @@ from loongcollector_spark.operators import aggregate as agg_ops
 from loongcollector_spark.operators import enrich, filters
 from loongcollector_spark.operators.parse_kv import parse_key_value
 from loongcollector_spark.operators.route import Condition, Route, route_first_match
+from loongcollector_spark.sources.sql_oracle import (
+    pmod_sql,
+    u64_to_i64_sql,
+    xxhash64_longs_sql,
+    xxhash64_str_sql,
+)
 from loongcollector_spark.sources.tables import load_table
 
 
@@ -1734,32 +1740,75 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.withColumn("jaccard", F.round("jaccard", 4))
 
 
-# DuckDB gram-hash identical to dedup.md5_hash60 (60-bit positive long)
-_MD5H60 = "('0x' || substr(md5({g}), 1, 15))::BIGINT"
+def _gram_hash_ctes(words_sql: str, ns: tuple[int, ...], p: str = "") -> str:
+    """DuckDB CTEs replaying dedup.gram_hashes over the word lists of
+    ``words_sql`` (a SELECT of doc_id and the word list l): ``{p}grams``
+    holds (doc_id, n, i, h), the hash of the n-gram that starts at word i.
+    Each distinct word is string-hashed once and each distinct n-tuple of
+    word hashes is long-hashed once, then joined back: the SQL hash is far
+    dearer than a native one, so it never runs per occurrence. The
+    fragments live here once so the oracles cannot drift."""
+    ctes = [
+        f"{p}g_tok AS ({words_sql})",
+        f"{p}g_pos AS (SELECT doc_id, unnest(l) AS w, generate_subscripts(l, 1) AS i"
+        f" FROM {p}g_tok)",
+        f"{p}g_voc AS (SELECT DISTINCT w FROM {p}g_pos)",
+        f"{p}g_wh AS ({xxhash64_str_sql(f'{p}g_voc', 'w', 'h')})",
+        f"{p}g_1 AS MATERIALIZED (SELECT doc_id, i, h FROM {p}g_pos JOIN {p}g_wh USING (w))",
+    ]
+    for n in ns:
+        if n == 1:
+            continue
+        hs = [f"h{k}" for k in range(n)]
+        leads = ", ".join(
+            f"lead(h, {k}) OVER (PARTITION BY doc_id ORDER BY i) AS h{k}" for k in range(1, n)
+        )
+        ctes += [
+            f"{p}g_win{n} AS (SELECT * FROM (SELECT doc_id, i, h AS h0, {leads} FROM {p}g_1)"
+            f" WHERE h{n - 1} IS NOT NULL)",
+            f"{p}g_tup{n} AS (SELECT DISTINCT {', '.join(hs)} FROM {p}g_win{n})",
+            f"{p}g_th{n} AS ({xxhash64_longs_sql(f'{p}g_tup{n}', hs, 'h')})",
+            f"{p}g_{n} AS (SELECT doc_id, i, h FROM {p}g_win{n}"
+            f" JOIN {p}g_th{n} USING ({', '.join(hs)}))",
+        ]
+    union = " UNION ALL ".join(f"SELECT doc_id, {n} AS n, i, h FROM {p}g_{n}" for n in ns)
+    ctes.append(f"{p}grams AS MATERIALIZED ({union})")
+    return ",\n    ".join(ctes)
 
 
-def _shingle_ctes(n: int, table: str = "documents", prefix: str = "") -> str:
-    """DuckDB CTEs replicating dedup.shingles(): distinct word n-grams.
-    ``table``/``prefix`` let one statement shingle several relations (the
-    cross-corpus oracle) with the SAME expression text as the self-join
-    oracle — the fragments live here once so the oracles cannot drift."""
-    return f"""
-    {prefix}toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM {table}),
-    {prefix}sh AS (
-      SELECT doc_id, list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                   i -> array_to_string(l[i:i+{n - 1}], ' '))) AS grams
-      FROM {prefix}toks WHERE len(l) >= {n})"""
-
-
-def _minhash_sig_expr(num_hashes: int, A: str, B: str) -> str:
-    """The (a*x+b) mod 2^31-1 min-signature list expression over a gram-hash
-    list column ``h`` — shared by the self-join and cross-corpus oracles."""
+def _lower_words(table: str) -> str:
+    """The word lists dedup.hashed_shingles splits (lower-cased)."""
     return (
-        f"list_transform(range({num_hashes}), k -> "
-        f"list_min(list_transform(h, x -> ({A}[k+1] * x + {B}[k+1]) % 2147483647)))"
+        "SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l"
+        f" FROM {table}"
     )
+
+
+# the word lists text.words splits (case kept)
+_WORDS = (
+    "SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS l"
+    " FROM documents"
+)
+
+# dedup.minhash_signatures' reduction of a gram hash h mod 2^31-1, read as u64
+_H31 = f"({pmod_sql('h', 2147483647)} + CASE WHEN h < 0 THEN 4 ELSE 0 END) % 2147483647"
+
+
+def _minhash_sig_sql(grams: str, num_hashes: int, seed: int) -> str:
+    """(doc_id, sig) MinHash signatures over a _gram_hash_ctes relation:
+    per permutation k, the min of (a_k*x+b_k) mod 2^31-1 over the doc's
+    gram hashes x reduced as dedup.minhash_signatures does — the exact
+    coefficients come from dedup.minhash_coeffs."""
+    a, b = dedup.minhash_coeffs(num_hashes, seed)
+    coef = " UNION ALL ".join(
+        f"SELECT {k} AS k, {a[k]} AS a, {b[k]} AS b" for k in range(num_hashes)
+    )
+    return f"""
+      SELECT doc_id, list(m ORDER BY k) AS sig FROM (
+        SELECT doc_id, k, min((a * x + b) % 2147483647) AS m
+        FROM (SELECT doc_id, {_H31} AS x FROM {grams}) CROSS JOIN ({coef})
+        GROUP BY doc_id, k)
+      GROUP BY doc_id"""
 
 
 def _minhash_band_cte(sig_cte: str, rpb: int, bands: int) -> str:
@@ -1773,24 +1822,16 @@ def _minhash_band_cte(sig_cte: str, rpb: int, bands: int) -> str:
 
 
 def _minhash_oracle_sql(n: int = 3, num_hashes: int = 32, bands: int = 8, seed: int = 42) -> str:
-    """Full DuckDB replay of minhash_lsh_candidates with the md5 gram hash:
-    the (a*x+b) mod 2^31-1 permutations are plain integer arithmetic (the
-    exact coefficients come from dedup.minhash_coeffs), bands are list
-    slices, and the band bucket key is the slice rendered as a string (Spark
-    joins on xxhash64 of that string — same equivalence classes)."""
-    a, b = dedup.minhash_coeffs(num_hashes, seed)
+    """Full DuckDB replay of minhash_lsh_candidates: the gram hashes come
+    from _gram_hash_ctes, the (a*x+b) mod 2^31-1 permutations are plain
+    integer arithmetic (the exact coefficients come from
+    dedup.minhash_coeffs), bands are list slices, and the band bucket key
+    is the slice rendered as a string (Spark joins on xxhash64 of that
+    string — same equivalence classes)."""
     rpb = num_hashes // bands
-    A = "[" + ",".join(map(str, a)) + "]"
-    B = "[" + ",".join(map(str, b)) + "]"
-    gh = _MD5H60.format(g="g")
     return f"""
-    WITH {_shingle_ctes(n)},
-    gh AS (
-      SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-      FROM sh WHERE len(grams) > 0),
-    sig AS (
-      SELECT doc_id, {_minhash_sig_expr(num_hashes, A, B)} AS sig
-      FROM gh),
+    WITH {_gram_hash_ctes(_lower_words("documents"), (n,))},
+    sig AS ({_minhash_sig_sql("grams", num_hashes, seed)}),
     banded AS (
       {_minhash_band_cte("sig", rpb, bands)}),
     pairs AS (
@@ -1807,15 +1848,13 @@ def _minhash_oracle_sql(n: int = 3, num_hashes: int = 32, bands: int = 8, seed: 
 @register(
     "dedup_minhash_lsh",
     _minhash_oracle_sql(),
-    doc="MinHash+LSH banding candidates (est_jaccard = signature agreement); "
-        "md5-based gram hash for cross-engine replay, xxhash64 default "
-        "unit-tested as the production path",
+    doc="MinHash+LSH banding candidates (est_jaccard = signature agreement) "
+        "over the xxhash64 gram hash, which DuckDB replays bit for bit",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_candidates(
         docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
-        gram_hash=dedup.md5_hash60,
     )
 
 
@@ -1827,24 +1866,15 @@ def _minhash_cross_oracle_sql(
     'benchmark set' whose near-dup overlap with its source is guaranteed);
     signatures/banding identical, the band join is corpus x bench instead
     of a self-join, no ordering constraint on the pair."""
-    a, b = dedup.minhash_coeffs(num_hashes, seed)
     rpb = num_hashes // bands
-    A = "[" + ",".join(map(str, a)) + "]"
-    B = "[" + ",".join(map(str, b)) + "]"
-    gh = _MD5H60.format(g="g")
-    sig = _minhash_sig_expr(num_hashes, A, B)
     return f"""
     WITH bench_raw AS (
       SELECT doc_id, substr(text, 1, 240) AS text
       FROM documents WHERE doc_id % 20 = 0),
-    {_shingle_ctes(n, table="documents", prefix="c")},
-    {_shingle_ctes(n, table="bench_raw", prefix="b")},
-    cgh AS (SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-            FROM csh WHERE len(grams) > 0),
-    bgh AS (SELECT doc_id, list_transform(grams, g -> {gh} % 2147483647) AS h
-            FROM bsh WHERE len(grams) > 0),
-    csig AS (SELECT doc_id, {sig} AS sig FROM cgh),
-    bsig AS (SELECT doc_id, {sig} AS sig FROM bgh),
+    {_gram_hash_ctes(_lower_words("documents"), (n,), "c")},
+    {_gram_hash_ctes(_lower_words("bench_raw"), (n,), "b")},
+    csig AS ({_minhash_sig_sql("cgrams", num_hashes, seed)}),
+    bsig AS ({_minhash_sig_sql("bgrams", num_hashes, seed)}),
     cband AS (
       {_minhash_band_cte("csig", rpb, bands)}),
     bband AS (
@@ -1881,34 +1911,35 @@ def fuzzy_contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dedup.minhash_cross_candidates(
         docs, bench, "text", "doc_id", n=3, num_hashes=32, bands=8,
-        gram_hash=dedup.md5_hash60,
     )
+
+
+def _simhash_sig_ctes(n: int) -> str:
+    """DuckDB CTEs replaying dedup.simhash_signatures over the distinct gram
+    hashes of each document: ``sig(doc_id, sig)``, bit j set iff more than
+    half the grams have bit j set; docs with fewer than n words fold to
+    sig 0 exactly like the Spark left join."""
+    bits = (
+        "list_sum(list_transform(range(64), j ->"
+        " CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)"
+        " THEN (1::HUGEINT << j) ELSE 0::HUGEINT END))"
+    )
+    return f"""{_gram_hash_ctes(_lower_words("documents"), (n,))},
+    gh AS (SELECT doc_id, list(DISTINCT h) AS h FROM grams GROUP BY doc_id),
+    folded AS (SELECT doc_id, {u64_to_i64_sql(bits)} AS sig FROM gh),
+    sig AS (
+      SELECT d.doc_id, coalesce(f.sig, 0) AS sig
+      FROM documents d LEFT JOIN folded f USING (doc_id))"""
 
 
 def _simhash_oracle_sql(n: int = 2, max_hamming: int = 8, prefix_bits: int = 16) -> str:
     """DuckDB replay of simhash_near_dups: per-bit majority vote over the
-    gram hashes (md5 60-bit variant), prefix-bucket join, bit_count(xor)
-    Hamming. Docs with <n words fold to sig 0 exactly like the Spark UDF."""
-    gh = _MD5H60.format(g="g")
+    gram hashes, prefix-bucket join, bit_count(xor) Hamming."""
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
-    bucketed AS (SELECT doc_id, sig, sig >> {64 - prefix_bits} AS bucket FROM sig)
+    WITH {_simhash_sig_ctes(n)},
+    bucketed AS (
+      SELECT doc_id, sig, (sig >> {64 - prefix_bits}) & {(1 << prefix_bits) - 1} AS bucket
+      FROM sig)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.sig, b.sig))::INT AS hamming
     FROM bucketed a JOIN bucketed b ON a.bucket = b.bucket
@@ -1919,14 +1950,12 @@ def _simhash_oracle_sql(n: int = 2, max_hamming: int = 8, prefix_bits: int = 16)
 @register(
     "dedup_simhash",
     _simhash_oracle_sql(),
-    doc="SimHash near-dup pairs within prefix-LSH buckets (md5 gram hash for "
-        "cross-engine replay; xxhash64 default unit-tested)",
+    doc="SimHash near-dup pairs within prefix-LSH buckets over the xxhash64 "
+        "gram hash, which DuckDB replays bit for bit",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=8, gram_hash=dedup.md5_hash60
-    )
+    return dedup.simhash_near_dups(docs, "text", "doc_id", n=2, max_hamming=8)
 
 
 def _simhash_multirot_oracle_sql(
@@ -1936,26 +1965,9 @@ def _simhash_multirot_oracle_sql(
     [64-(r+1)*pb, 64-r*pb); candidates union over blocks, DISTINCT on the
     pair. With n_rotations >= max_hamming+1 covering all 64 bits the result
     IS the exact hamming<=max_hamming pair set (pigeonhole)."""
-    gh = _MD5H60.format(g="g")
     mask = (1 << prefix_bits) - 1
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
+    WITH {_simhash_sig_ctes(n)},
     bucketed AS (
       SELECT doc_id, sig, t.rot AS rot,
              (sig >> (64 - (t.rot + 1) * {prefix_bits})) & {mask} AS bucket
@@ -1972,25 +1984,8 @@ def _cluster_keepers_oracle_sql(n: int = 2, max_hamming: int = 3) -> str:
     """Pairs = the exact hamming<=max_hamming set (what the multirot banding
     provably returns); clusters = transitive closure via a recursive CTE;
     keeper = min doc_id per component; singletons keep themselves."""
-    gh = _MD5H60.format(g="g")
     return f"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(l) >= {n}
-                  THEN list_distinct(list_transform(range(1, len(l) - {n - 2}),
-                                     i -> array_to_string(l[i:i+{n - 1}], ' ')))
-                  ELSE [] END AS grams
-      FROM toks),
-    gh AS (SELECT doc_id, list_transform(grams, g -> {gh}) AS h FROM sh),
-    sig AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(64), j ->
-               CASE WHEN 2 * len(list_filter(h, x -> (x >> j) & 1 = 1)) > len(h)
-                    THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS sig
-      FROM gh),
+    WITH RECURSIVE {_simhash_sig_ctes(n)},
     pairs AS (
       SELECT a.doc_id AS ida, b.doc_id AS idb
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -2021,8 +2016,7 @@ def _cluster_keepers_oracle_sql(n: int = 2, max_hamming: int = 3) -> str:
 def dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=3,
-        gram_hash=dedup.md5_hash60, n_rotations=4,
+        docs, "text", "doc_id", n=2, max_hamming=3, n_rotations=4,
     )
     return dedup.dedup_keepers(docs, pairs, "doc_id")
 
@@ -2037,8 +2031,7 @@ def dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash_multirot(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_near_dups(
-        docs, "text", "doc_id", n=2, max_hamming=3,
-        gram_hash=dedup.md5_hash60, n_rotations=4,
+        docs, "text", "doc_id", n=2, max_hamming=3, n_rotations=4,
     )
 
 
@@ -3657,23 +3650,11 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dsir_importance_weights",
-    """
-    WITH docs AS (
-      SELECT doc_id, lang,
-             list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
-      FROM documents),
-    grams AS (
-      SELECT doc_id, lang,
-             UNNEST(list_concat(
-               ws,
-               list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])
-             )) AS g
-      FROM docs),
+    f"""
+    WITH {_gram_hash_ctes(_WORDS, (1, 2))},
     feat AS (
-      SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 1024 AS b,
-             COUNT(*) AS c
-      FROM grams GROUP BY ALL),
+      SELECT doc_id, lang, {pmod_sql("h", 1024)} AS b, COUNT(*) AS c
+      FROM grams JOIN documents USING (doc_id) GROUP BY ALL),
     hist AS (
       SELECT b, SUM(c) AS raw_c,
              SUM(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS tgt_c
@@ -3684,12 +3665,12 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                - ln((raw_c + 1.0) / (rt + 1024.0)) AS t
       FROM hist, tot)
     SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_grams,
-           ROUND(SUM(c * t), 4) AS dsir_weight
+           ROUND(SUM(c * t), 4) + 0.0 AS dsir_weight
     FROM feat JOIN term USING (b) GROUP BY doc_id
     """,
     doc="DSIR importance weights (Xie et al. 2023): per-doc "
         "log p_target/p_raw under hashed unigram+bigram bag models, "
-        "target = lang='en', B=1024 md5 buckets, Laplace smoothing 1. "
+        "target = lang='en', B=1024 gram-hash buckets, Laplace smoothing 1. "
         "The only shuffle is the B-row bucket histogram (map-side combined "
         "explode→groupBy); scoring is a per-doc F.aggregate fold over the "
         "gram array against a broadcast map<bucket,log-ratio> — no "
@@ -3703,47 +3684,36 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = dsir_importance(
         docs, "text", "doc_id", F.col("lang") == "en", n_buckets=1024
     )
+    # + 0.0 canonicalizes IEEE negative zero, which the two engines round
+    # to with opposite signs
     return w.select(
-        "doc_id", "n_grams", F.round("dsir_weight", 4).alias("dsir_weight")
+        "doc_id",
+        "n_grams",
+        (F.round("dsir_weight", 4) + F.lit(0.0)).alias("dsir_weight"),
     )
 
 
 @register(
     "lm_perplexity_buckets",
-    """
-    WITH docs AS (
-      SELECT doc_id, lang,
-             list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
-      FROM documents),
-    d2 AS (SELECT doc_id, lang, ws, len(ws) AS n FROM docs WHERE len(ws) >= 2),
+    f"""
+    WITH {_gram_hash_ctes(_WORDS, (1, 2))},
+    d2 AS (SELECT doc_id, lang FROM documents JOIN g_tok USING (doc_id) WHERE len(l) >= 2),
+    uni AS (SELECT doc_id, i, {pmod_sql("h", 1024)} AS u FROM grams WHERE n = 1),
+    big AS (SELECT doc_id, i, {pmod_sql("h", 4096)} AS g FROM grams WHERE n = 2),
     unic AS (
-      SELECT u AS b, COUNT(*) AS c FROM (
-        SELECT UNNEST(list_transform(ws, w ->
-          CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 1024)) AS u
-        FROM d2 WHERE lang = 'en')
-      GROUP BY 1),
+      SELECT u AS b, COUNT(*) AS c FROM uni JOIN d2 USING (doc_id)
+      WHERE lang = 'en' GROUP BY 1),
     bigc AS (
-      SELECT g AS b, COUNT(*) AS c FROM (
-        SELECT UNNEST(list_transform(range(1, n), i ->
-          CAST(('0x' || substr(md5(ws[i] || ' ' || ws[i + 1]), 1, 15))
-            AS BIGINT) % 4096)) AS g
-        FROM d2 WHERE lang = 'en')
-      GROUP BY 1),
-    pairs AS (
-      SELECT doc_id,
-             UNNEST(list_transform(range(1, n), i -> struct_pack(
-               u := CAST(('0x' || substr(md5(ws[i]), 1, 15)) AS BIGINT)
-                      % 1024,
-               g := CAST(('0x' || substr(md5(ws[i] || ' ' || ws[i + 1]), 1,
-                      15)) AS BIGINT) % 4096))) AS p
-      FROM d2),
+      SELECT g AS b, COUNT(*) AS c FROM big JOIN d2 USING (doc_id)
+      WHERE lang = 'en' GROUP BY 1),
+    pairs AS (SELECT doc_id, u, g FROM big JOIN uni USING (doc_id, i)),
     scored AS (
       SELECT doc_id, COUNT(*) AS n_bigrams,
              -SUM(ln((COALESCE(bc.c, 0) + 1.0)
                      / (COALESCE(uc.c, 0) + 4096.0))) / COUNT(*) AS xent
       FROM pairs
-      LEFT JOIN unic uc ON uc.b = (p).u
-      LEFT JOIN bigc bc ON bc.b = (p).g
+      LEFT JOIN unic uc ON uc.b = u
+      LEFT JOIN bigc bc ON bc.b = g
       GROUP BY doc_id),
     b AS (SELECT doc_id, n_bigrams, xent,
                  CAST(FLOOR(xent * 100) AS INT) AS sbin FROM scored),
@@ -3760,7 +3730,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b, cuts
     """,
     doc="CCNet-style LM-perplexity corpus partitioning (Wenzek et al. "
-        "2020): a hashed-bigram LM (add-one smoothing, md5 buckets "
+        "2020): a hashed-bigram LM (add-one smoothing, gram-hash buckets "
         "1024/4096) trains on the lang='en' slice, every doc scores by "
         "per-token cross-entropy, and the corpus splits head/middle/tail "
         "by exact tercile cutoffs read off a bounded score-bin histogram "
@@ -4883,46 +4853,35 @@ def source_cap_rank_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bloom_contamination_flags",
-    """
-    WITH ws AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS w
-      FROM documents),
-    grams AS (
-      SELECT doc_id,
-             list_transform(range(1, len(w) - 3),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-                    w[i+3] || ' ' || w[i+4]) AS gs
-      FROM ws),
+    f"""
+    WITH {_gram_hash_ctes(_WORDS, (5,))},
+    pos AS (
+      SELECT doc_id, {pmod_sql("h", 262144)} AS p1,
+             ((h >> 32) & 4294967295) % 262144 AS p2
+      FROM grams),
     bench_pos AS (
-      SELECT DISTINCT UNNEST([
-               ('0x' || substr(md5(gram), 1, 15))::BIGINT % 262144,
-               ('0x' || substr(md5(gram), 17, 15))::BIGINT % 262144]) AS p
-      FROM (SELECT UNNEST(gs) AS gram FROM grams WHERE doc_id % 7 = 0)),
-    cg AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(gram), 1, 15))::BIGINT % 262144 AS p1,
-             ('0x' || substr(md5(gram), 17, 15))::BIGINT % 262144 AS p2
-      FROM (SELECT doc_id, UNNEST(gs) AS gram FROM grams)),
+      SELECT DISTINCT UNNEST([p1, p2]) AS p FROM pos WHERE doc_id % 7 = 0),
     hits AS (
-      SELECT doc_id, COUNT(*) AS n_hits FROM cg
+      SELECT doc_id, COUNT(*) AS n_hits FROM pos
       WHERE p1 IN (SELECT p FROM bench_pos)
         AND p2 IN (SELECT p FROM bench_pos)
-      GROUP BY doc_id)
-    SELECT g.doc_id, CAST(len(g.gs) AS BIGINT) AS n_grams, h.n_hits
-    FROM grams g JOIN hits h USING (doc_id)
+      GROUP BY doc_id),
+    sizes AS (SELECT doc_id, COUNT(*) AS n_grams FROM pos GROUP BY doc_id)
+    SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams, n_hits
+    FROM sizes JOIN hits USING (doc_id)
     """,
     doc="broadcast Bloom-bitset benchmark decontamination over word "
         "5-grams (bench = doc_id %% 7): the corpus side is scan -> project "
         "-> filter with ZERO exchange — membership rides to executors as a "
         "32 KiB bitset instead of shuffle-joining 100 TB of shingles. "
-        "Positions are md5-derived so DuckDB rebuilds the identical bitset "
-        "and replays membership exactly, INCLUDING the deterministic false "
+        "Positions come from the xxhash64 gram hash, which DuckDB replays, "
+        "so it rebuilds the identical bitset and replays membership "
+        "exactly, INCLUDING the deterministic false "
         "positives (k=2, m=2^18)",
 )
 def bloom_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").withColumn(
-        "grams", tx.word_ngrams(F.col("text"), 5)
+        "grams", dedup.gram_hashes(tx.words(F.col("text")), (5,))
     )
     bench = docs.filter(F.col("doc_id") % 7 == 0)
     out = bloom.bloom_decontaminate(docs, "grams", "doc_id", bench)
@@ -4931,23 +4890,11 @@ def bloom_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_classifier_gate",
-    """
-    WITH docs AS (
-      SELECT doc_id, n_chars >= 400 AS pos,
-             list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
-      FROM documents),
-    grams AS (
-      SELECT doc_id, pos,
-             UNNEST(list_concat(
-               ws,
-               list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i + 1])
-             )) AS g
-      FROM docs),
+    f"""
+    WITH {_gram_hash_ctes(_WORDS, (1, 2))},
     feat AS (
-      SELECT doc_id, pos,
-             CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 2048 AS b,
-             COUNT(*) AS c
-      FROM grams GROUP BY ALL),
+      SELECT doc_id, n_chars >= 400 AS pos, {pmod_sql("h", 2048)} AS b, COUNT(*) AS c
+      FROM grams JOIN documents USING (doc_id) GROUP BY ALL),
     hist AS (
       SELECT b,
              SUM(CASE WHEN pos THEN c ELSE 0 END) AS pc,

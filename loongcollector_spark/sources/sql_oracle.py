@@ -9,6 +9,10 @@ floor, and cumulative-weight searchsorted all agree).
 
 This is the strongest form of the north rule's "token-array equality vs the
 reference output": the oracle recomputes the expected tokens from seed alone.
+
+The module also replays Spark's xxhash64 (``xxhash64_str_sql`` /
+``xxhash64_longs_sql``), so the gram-hash queries' oracles recompute the
+production gram hash (``functions.dedup.gram_hashes``) bit for bit.
 """
 
 from __future__ import annotations
@@ -50,6 +54,139 @@ def splitmix64_sql(x: str) -> str:
     x4 = _xorshift(x3, 27)
     x5 = _mul64(x4, "10723151780598845931")
     return _xorshift(x5, 31)
+
+
+# --------------------------------------------------------------------------
+# Spark's xxhash64 (org.apache.spark.sql.catalyst.expressions.XXH64, seed 42)
+# replayed bit for bit. Values are u64 held in UHUGEINT: products of two u64
+# fit in 128 bits, and `& 2^64-1` wraps them (a 128-bit `%` is an order of
+# magnitude slower in DuckDB 1.0). A value used twice in one expression is
+# evaluated twice and its text doubles, so the hash runs as a chain of
+# one-level projections, each adding one column (`_staged`).
+# --------------------------------------------------------------------------
+
+_XP1 = 11400714785074694791
+_XP2 = 14029467366897019727
+_XP3 = 1609587929392839161
+_XP4 = 9650029242287828579
+_XP5 = 2870177450012600261
+_U = "::UHUGEINT"
+
+
+def _w(x: str) -> str:
+    return f"(({x}) & {_M64 - 1}{_U})"
+
+
+def _mul(x: str, c) -> str:
+    return _w(f"({x}) * {c}{_U}")
+
+
+def _add(x: str, y) -> str:
+    return _w(f"({x}) + ({y}){_U}")
+
+
+def _rotl(x: str, r: int) -> str:
+    return f"({_w(f'({x}) << {r}')} | (({x}) >> {64 - r}))"
+
+
+def _xs(x: str, s: int) -> str:
+    return f"xor({x}, ({x}) >> {s})"
+
+
+def _round(acc: str, lane: str) -> str:
+    return _mul(_rotl(_add(acc, _mul(lane, _XP2)), 31), _XP1)
+
+
+def _hex_le(b: str, byte0: str, nbytes: int) -> str:
+    """Little-endian u64 of ``nbytes`` bytes at 0-based ``byte0`` of the
+    hex string ``b``."""
+    digits = " || ".join(
+        f"substr({b}, 2 * ({byte0}) + {2 * k + 1}, 2)" for k in reversed(range(nbytes))
+    )
+    return f"CAST(('0x' || {digits}) AS UBIGINT){_U}"
+
+
+def _fmix(h: str, p: str) -> list[tuple[str, str]]:
+    return [
+        (f"{p}f1", _mul(_xs(h, 33), _XP2)),
+        (f"{p}f2", _mul(_xs(f"{p}f1", 29), _XP3)),
+        (f"{p}f3", _xs(f"{p}f2", 32)),
+    ]
+
+
+def u64_to_i64_sql(u: str) -> str:
+    """A u64 (any non-negative integer type below 2^64) as the signed
+    BIGINT with the same bits, as a JVM long holds it."""
+    flipped = f"xor(CAST({u} AS UHUGEINT), {1 << 63}{_U})"
+    return f"CAST(CAST({flipped} AS HUGEINT) - {1 << 63} AS BIGINT)"
+
+
+def _staged(src: str, steps: list[tuple[str, str]], out: str) -> str:
+    """``SELECT *, <last step> AS out FROM src``: each step becomes a column
+    of its own projection, so a value used twice is computed once."""
+    sql = f"SELECT * FROM {src}"
+    for name, expr in steps:
+        sql = f"SELECT *, {expr} AS {name} FROM ({sql})"
+    temps = ", ".join(name for name, _ in steps)
+    last = u64_to_i64_sql(steps[-1][0])
+    return f"SELECT * EXCLUDE ({temps}), {last} AS {out} FROM ({sql})"
+
+
+def xxhash64_str_sql(src: str, col: str, out: str) -> str:
+    """``SELECT *, F.xxhash64(col) AS out FROM src`` for a VARCHAR column:
+    XXH64.hashUnsafeBytes over the UTF-8 bytes — 32-byte stripes, then
+    8-byte lanes, one 4-byte word and single bytes, then the finaliser."""
+    s = f"42{_U}"
+    v0 = [_add(s, _XP1 + _XP2), _add(s, _XP2), s, _add(s, (1 << 64) - _XP1)]
+    init = "struct_pack(" + ", ".join(f"v{i} := {v0[i]}" for i in range(4)) + ")"
+    stripes = "list_transform(range(__n // 32), i -> struct_pack(" + ", ".join(
+        f"v{i} := __l[4 * i + {i + 1}]" for i in range(4)) + "))"
+    step = "struct_pack(" + ", ".join(
+        f"v{i} := {_round(f'a.v{i}', f'x.v{i}')}" for i in range(4)) + ")"
+    h = _w(" + ".join(_rotl(f"__v.v{i}", r) for i, r in enumerate((1, 7, 12, 18))))
+    for i in range(4):
+        h = _add(_mul(f"xor({h}, {_round('0', f'__v.v{i}')})", _XP1), _XP4)
+    lane = _add(_mul(_rotl(f"xor(a, {_round('0', 'k')})", 27), _XP1), _XP4)
+    tail = "__l[__n // 32 * 4 + 1 :]"  # the lanes after the last stripe
+    word = _mul(_hex_le("__b", "__n // 8 * 8", 4), _XP1)
+    word_step = _add(_mul(_rotl(f"xor(__h2, {word})", 23), _XP2), _XP3)
+    byte = f"CAST(('0x' || substr(__b, 2 * i + 1, 2)) AS UBIGINT){_U}"
+    byte_step = _mul(_rotl(f"xor(a, {_mul('c', _XP5)})", 11), _XP1)
+    return _staged(src, [
+        ("__b", f"hex(encode({col}))"),
+        ("__n", f"octet_length(encode({col}))"),
+        ("__l", f"list_transform(range(__n // 8), j -> {_hex_le('__b', '8 * j', 8)})"),
+        ("__v", f"list_reduce(list_concat([{init}], {stripes}), (a, x) -> {step})"),
+        ("__h1", _add(f"CASE WHEN __n >= 32 THEN {h} ELSE {_add(s, _XP5)} END", "__n")),
+        ("__h2", f"list_reduce(list_concat([__h1], {tail}), (a, k) -> {lane})"),
+        ("__h3", f"CASE WHEN __n % 8 >= 4 THEN {word_step} ELSE __h2 END"),
+        ("__h4", f"list_reduce(list_concat([__h3], list_transform(range(__n - __n % 4, __n), "
+                 f"i -> {byte})), (a, c) -> {byte_step})"),
+        *_fmix("__h4", "__s"),
+    ], out)
+
+
+def xxhash64_longs_sql(src: str, cols: list[str], out: str) -> str:
+    """``SELECT *, F.xxhash64(c1, c2, ...) AS out FROM src`` for non-null
+    BIGINT columns: XXH64.hashLong per column, each hash seeding the next."""
+    steps: list[tuple[str, str]] = []
+    seed = f"42{_U}"
+    for i, c in enumerate(cols):
+        p = f"__x{i}"
+        u = f"CAST(CAST({c} AS HUGEINT) + {_M64} AS UHUGEINT)"
+        steps += [
+            (f"{p}a", _mul(_w(u), _XP2)),
+            (f"{p}b", f"xor({_add(seed, _XP5 + 8)}, {_mul(_rotl(f'{p}a', 31), _XP1)})"),
+            (f"{p}c", _add(_mul(_rotl(f"{p}b", 27), _XP1), _XP4)),
+            *_fmix(f"{p}c", p),
+        ]
+        seed = f"{p}f3"
+    return _staged(src, steps, out)
+
+
+def pmod_sql(x: str, m: int) -> str:
+    """Spark's ``pmod(x, m)``: the non-negative remainder."""
+    return f"((({x}) % {m}) + {m}) % {m}"
 
 
 def _xor_const(a: str, c: int) -> str:

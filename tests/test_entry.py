@@ -51,6 +51,12 @@ SPOT = [
     "syslog_rfc3164_parse",
     "pick_drop_keys_projection",
     "tag_route_rollup",
+    # the production gram hash (dedup.gram_hashes) against its DuckDB replay
+    "dedup_simhash_multirot",
+    "bloom_contamination_flags",
+    "quality_classifier_gate",
+    "dsir_importance_weights",
+    "dedup_minhash_lsh",
 ]
 
 

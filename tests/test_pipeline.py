@@ -331,3 +331,16 @@ def test_kafka_records_shape_and_gating(spark):
     with _pytest.raises(RuntimeError, match="--packages"):
         write_sink(routed, SinkSpec("k", format="kafka",
                                     options={"kafka.bootstrap.servers": "b:9092"}))
+
+
+def test_failing_sink_releases_routed_cache(spark):
+    """run_pipeline persists the routed relation; a sink that fails must not
+    leave it cached."""
+    df = render_lines(generate_sequences(spark, 200, partitions=2))
+    spec = flagship_spec()
+    # the kafka connector jar is absent, so this sink raises
+    spec.sinks = {"errors": SinkSpec(name="errors", format="kafka", options={"topic": "t"})}
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="--packages"):
+        run_pipeline(df, spec)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -13,6 +13,7 @@ from loongcollector_spark.functions.bloom import (
     bloom_positions,
     build_bloom_bits,
 )
+from loongcollector_spark.functions.dedup import gram_hashes
 from loongcollector_spark.functions.sampling import (
     source_cap_keepers,
     temperature_resample,
@@ -100,10 +101,14 @@ def test_source_cap_gate_bounds_candidates(spark, sf_dir):
 # ------------------------------------------------------------------ bloom
 
 
+def _five_grams(docs):
+    return docs.withColumn("grams", gram_hashes(tx.words(F.col("text")), (5,)))
+
+
 def test_bloom_bits_positions_roundtrip(spark):
     df = spark.createDataFrame(
-        [(["alpha beta gamma delta eps"],), (["zeta eta theta iota kappa"],)],
-        "grams: array<string>",
+        [([-(1 << 63), -1, 0, 1],), ([(1 << 63) - 1, 123456789012345],)],
+        "grams: array<bigint>",
     )
     m = 1 << 12
     bits = build_bloom_bits(df, "grams", m)
@@ -113,28 +118,24 @@ def test_bloom_bits_positions_roundtrip(spark):
     pos = g.select(p1.alias("p1"), p2.alias("p2")).collect()
     for r in pos:
         for p in (r["p1"], r["p2"]):
+            assert 0 <= p < m
             assert bits[p >> 3] & (1 << (p & 7))
 
 
 def test_bloom_self_hits_complete(spark, sf_dir):
-    """Every benchmark doc must flag itself with n_hits >= its own gram
+    """Every benchmark doc must flag itself with n_hits == its own gram
     count (Bloom filters have no false negatives)."""
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "grams", tx.word_ngrams(F.col("text"), 5)
-    )
+    docs = _five_grams(load_table(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 3 == 0).filter(F.size("grams") > 0)
     out = bloom_decontaminate(docs, "grams", "doc_id", bench)
     flagged = {r["doc_id"]: (r["n_grams"], r["n_hits"]) for r in out.collect()}
     for r in bench.select("doc_id", F.size("grams").alias("n")).collect():
-        assert r["doc_id"] in flagged
-        n_grams, n_hits = flagged[r["doc_id"]]
-        assert n_hits == n_grams  # every own shingle is in the filter
+        # every own shingle is in the filter
+        assert flagged[r["doc_id"]] == (r["n"], r["n"])
 
 
 def test_bloom_deterministic_false_positives(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "grams", tx.word_ngrams(F.col("text"), 5)
-    )
+    docs = _five_grams(load_table(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 5 == 0).filter(F.size("grams") > 0)
     a = {(r["doc_id"], r["n_hits"]) for r in bloom_decontaminate(docs, "grams", "doc_id", bench).collect()}
     b = {(r["doc_id"], r["n_hits"]) for r in bloom_decontaminate(docs, "grams", "doc_id", bench).collect()}
@@ -144,9 +145,7 @@ def test_bloom_deterministic_false_positives(spark, sf_dir):
 def test_bloom_no_shuffle_on_corpus_side(spark, sf_dir):
     """The corpus side of the decontamination must be scan -> project ->
     filter: no Exchange in the plan after the bitset is built."""
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "grams", tx.word_ngrams(F.col("text"), 5)
-    )
+    docs = _five_grams(load_table(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 5 == 0)
     out = bloom_decontaminate(docs, "grams", "doc_id", bench)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -182,39 +181,6 @@ def test_source_cap_single_corpus_exchange(spark, sf_dir):
     # more than once
     n_corpus_exchanges = plan.count("Exchange hashpartitioning(source")
     assert n_corpus_exchanges <= 2, plan
-
-
-# ----------------------------------------------------------- xxh64 fast path
-
-
-def test_bloom_xxh64_no_false_negatives(spark, sf_dir):
-    """The production xxhash64 path keeps the Bloom guarantee: every
-    benchmark doc flags itself with n_hits == its own gram count."""
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "grams", tx.word_ngrams(F.col("text"), 5)
-    )
-    bench = docs.filter(F.col("doc_id") % 3 == 0).filter(F.size("grams") > 0)
-    out = bloom_decontaminate(docs, "grams", "doc_id", bench, hash="xxh64")
-    flagged = {r["doc_id"]: (r["n_grams"], r["n_hits"]) for r in out.collect()}
-    for r in bench.select("doc_id", F.size("grams").alias("n")).collect():
-        assert flagged[r["doc_id"]] == (r["n"], r["n"])
-
-
-def test_hashed_ngram_buckets_xxh64_shape(spark):
-    """xxh64 buckets: same arity and range as the md5 twin, different
-    values (it IS a different hash), and a bad hash name raises."""
-    df = spark.createDataFrame(
-        [("the cat sat on the mat",)], "text string"
-    )
-    row = df.select(
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2)).alias("m"),
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2), hash="xxh64").alias("x"),
-    ).collect()[0]
-    assert len(row["m"]) == len(row["x"]) == 6 + 5
-    assert all(0 <= b < 64 for b in row["x"])
-    assert row["m"] != row["x"]
-    with pytest.raises(ValueError):
-        tx.hashed_ngram_buckets(F.col("text"), 64, (1,), hash="sha1")
 
 
 # -------------------------------------------------------------------- unimax

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from loongcollector_spark.functions import dedup, similarity
 from loongcollector_spark.functions import text as tx
+from tests.xxh64_ref import gram_hash
 
 
 @pytest.fixture(scope="module")
@@ -622,7 +623,6 @@ def test_dsir_importance_matches_pure_python(spark):
     """dsir_importance == a from-scratch pure-Python replay of the DSIR
     math (hashed unigram+bigram counts, Laplace-smoothed log-ratio) on a
     tiny corpus — and target-domain-looking docs outscore off-domain ones."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -639,11 +639,15 @@ def test_dsir_importance_matches_pure_python(spark):
 
     def buckets(text):
         ws = [w for w in text.split() if w]
-        grams = ws + [f"{x} {y}" for x, y in zip(ws, ws[1:])]
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-            for g in grams
-        ]
+        grams = [(w,) for w in ws] + list(zip(ws, ws[1:]))
+        return [gram_hash(*g) % B for g in grams]
+
+    # the feature arrays themselves: unigrams then bigrams, each in [0, B)
+    got_buckets = {
+        r["id"]: list(r["b"])
+        for r in df.select("id", tx.hashed_ngram_buckets(F.col("text"), B).alias("b")).collect()
+    }
+    assert got_buckets == {i: buckets(t) for i, t, _ in rows}
 
     feat = {i: Counter(buckets(t)) for i, t, _ in rows}
     raw, tgt = Counter(), Counter()
@@ -675,13 +679,63 @@ def test_dsir_importance_matches_pure_python(spark):
     assert got[3][1] > got[4][1]
 
 
+def test_dsir_importance_weights_signed_zero(spark, tmp_path):
+    """Finding: a DSIR weight just below zero rounded to -0.0 in DuckDB and
+    to 0.0 in Spark, so dsir_importance_weights missed its oracle. Both
+    sides now add 0.0 after rounding. This corpus holds such a doc."""
+    import math
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from loongcollector_spark.queries import QUERIES
+    from tools.check_oracles import table_hash
+
+    vocab = "the cat sat on mat dog rug a red fox and of to in is it be was for with".split()
+    rng = random.Random(28)
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 12))), rng.random() < 0.5)
+        for i in range(2000)
+    ]
+    (tmp_path / "documents.parquet").mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([i for i, _, _ in rows], pa.int64()),
+            "lang": [("en" if en else "de") for _, _, en in rows],
+            "text": [t for _, t, _ in rows],
+        }),
+        tmp_path / "documents.parquet" / "part-0.parquet",
+    )
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    raw = {
+        r["doc_id"]: r["dsir_weight"]
+        for r in tx.dsir_importance(docs, "text", "doc_id", F.col("lang") == "en").collect()
+    }
+    dedup.release_persisted()
+    assert -5e-5 < raw[802] < 0  # rounds to a zero of either sign
+
+    q = QUERIES["dsir_importance_weights"]
+    sdf = q.spark(spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    dedup.release_persisted()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet/*.parquet'")
+    drel = con.sql(q.sql)
+    drows = drel.fetchall()
+    assert table_hash(sdf.columns, srows) == table_hash(list(drel.columns), drows)
+    for cols, got in ((sdf.columns, srows), (list(drel.columns), drows)):
+        w = {r[cols.index("doc_id")]: r[cols.index("dsir_weight")] for r in got}
+        assert w[802] == 0.0 and math.copysign(1.0, w[802]) == 1.0
+
+
 def test_lm_perplexity_buckets_matches_pure_python(spark):
     """lm_perplexity_buckets == a from-scratch pure-Python replay of the
     CCNet-style hashed-bigram LM (train on the marked slice, add-one
     smoothing, cross-entropy in nats, histogram-tercile cutoffs) — and a
     doc made of train-slice phrasing lands in a better bucket than one
     made of vocabulary the LM never saw."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -696,14 +750,11 @@ def test_lm_perplexity_buckets_matches_pure_python(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string, is_tr boolean")
 
-    def b(g, n):
-        return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % n
-
     def grams(text):
         ws = [w for w in text.split() if w]
         return (
-            [b(w, BU) for w in ws],
-            [b(f"{x} {y}", BG) for x, y in zip(ws, ws[1:])],
+            [gram_hash(w) % BU for w in ws],
+            [gram_hash(x, y) % BG for x, y in zip(ws, ws[1:])],
         )
 
     unic, bigc = Counter(), Counter()
@@ -1092,7 +1143,6 @@ def test_quality_classifier_matches_pure_python(spark):
     the NB log-odds math (hashed unigram+bigram pos/neg counts, Laplace
     smoothing, length-normalized mean) — and reference-class-looking docs
     get keep=True while off-class ones do not."""
-    import hashlib
     import math
     from collections import Counter
 
@@ -1107,11 +1157,8 @@ def test_quality_classifier_matches_pure_python(spark):
 
     def buckets(text):
         ws = [w for w in text.split() if w]
-        grams = ws + [f"{x} {y}" for x, y in zip(ws, ws[1:])]
-        return [
-            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B
-            for g in grams
-        ]
+        grams = [(w,) for w in ws] + list(zip(ws, ws[1:]))
+        return [gram_hash(*g) % B for g in grams]
 
     feat = {i: Counter(buckets(t)) for i, t, _ in rows}
     pos, neg = Counter(), Counter()
