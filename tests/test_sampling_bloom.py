@@ -134,6 +134,40 @@ def test_bloom_self_hits_complete(spark, sf_dir):
         assert flagged[r["doc_id"]] == (r["n"], r["n"])
 
 
+def test_bloom_xxh64_no_false_negatives(spark, sf_dir):
+    """The xxhash64 gram hashes keep the Bloom guarantee at every gram
+    order: on unigram+bigram hashes (the DSIR feature grams) every
+    benchmark doc flags itself with n_hits == its own gram count."""
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "grams", gram_hashes(tx.words(F.col("text")), (1, 2))
+    )
+    bench = docs.filter(F.col("doc_id") % 3 == 1).filter(F.size("grams") > 0)
+    out = bloom_decontaminate(docs, "grams", "doc_id", bench)
+    flagged = {r["doc_id"]: (r["n_grams"], r["n_hits"]) for r in out.collect()}
+    for r in bench.select("doc_id", F.size("grams").alias("n")).collect():
+        assert flagged[r["doc_id"]] == (r["n"], r["n"])
+
+
+def test_hashed_ngram_buckets_xxh64_shape(spark):
+    """xxh64 buckets: one per unigram and bigram, each in [0, B) and equal
+    to the pure-Python XXH64 gram hash mod B; there is no hash option."""
+    from tests.xxh64_ref import gram_hash
+
+    text = "the cat sat on the mat"
+    df = spark.createDataFrame([(text,)], "text string")
+    got = df.select(
+        tx.hashed_ngram_buckets(F.col("text"), 64, (1, 2)).alias("x")
+    ).collect()[0]["x"]
+    ws = text.split()
+    assert len(got) == 6 + 5
+    assert all(0 <= b < 64 for b in got)
+    assert list(got) == [gram_hash(w) % 64 for w in ws] + [
+        gram_hash(x, y) % 64 for x, y in zip(ws, ws[1:])
+    ]
+    with pytest.raises(TypeError):
+        tx.hashed_ngram_buckets(F.col("text"), 64, (1,), hash="md5")
+
+
 def test_bloom_deterministic_false_positives(spark, sf_dir):
     docs = _five_grams(load_table(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 5 == 0).filter(F.size("grams") > 0)
