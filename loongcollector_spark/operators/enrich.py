@@ -657,7 +657,8 @@ def otel_metric_shape(
 
     Spark-first: ONE from_json + a flatten/explode chain of pure column
     expressions — no Python in the row path; the protobuf Format would ride
-    a mapInPandas decode slot instead (gated: no otlp wheel in container).
+    an Arrow-batch Python decode slot instead (gated: no otlp wheel in
+    container).
 
     ``branches`` narrows the parse to a subset of the five metric families
     (``gauge``/``sum``/``histogram``/``summary``/``exponential_histogram``):

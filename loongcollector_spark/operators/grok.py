@@ -8,18 +8,24 @@ detection); at runtime the ``Match`` list is tried FIRST-MATCH-WINS per log
 
 Spark-first: the grok→regex compilation happens entirely at PLAN TIME in
 Python (the driver), exactly mirroring the reference's Init-time expansion —
-the executors only ever see compiled regexes. Two engines:
+the executors only ever see compiled regexes. The extraction path follows
+from the widest pattern's capture count; there is no user-set engine option:
 
-- ``jvm`` — one ``rlike`` for the match predicate + one ``regexp_extract``
-  per capture, fused into whole-stage codegen. Best for few-capture patterns
-  (k+1 regex scans per row).
-- ``arrow`` — ONE vectorized pass per pattern over still-unmatched rows
-  (``Series.str.extract``, Arrow batches, no per-row Python). Best for
-  many-capture patterns like COMBINEDAPACHELOG (~10 captures) where the JVM
-  form would re-scan the line 11×.
+- fewer than ``_ARROW_CAPTURE_THRESHOLD`` (6) captures — JVM expressions: one
+  ``rlike`` per pattern + one ``regexp_extract`` per capture, fused into
+  whole-stage codegen;
+- at least 6 — one scalar struct ``pandas_udf`` over the source column only:
+  ONE vectorized ``str.contains`` + ``str.extract`` pass per pattern over the
+  still-unmatched rows, instead of re-scanning the line once per capture.
 
-``engine="auto"`` (default) picks arrow when the widest pattern has >=
-``_ARROW_CAPTURE_THRESHOLD`` captures.
+Measured on a 4-core host (100k ``events`` rows, ``local[4]``, median of 4
+warm runs), narrow rows / rows carrying a 512-int array: 3 captures took
+0.47 / 0.43 s as JVM expressions and 1.20 / 0.96 s in the UDF; the 12
+captures of COMBINEDAPACHELOG took 4.20 / 4.05 s as JVM expressions and
+1.37 / 1.34 s in the UDF. Only the source column crosses into Python, so the
+UDF's cost does not grow with row width (a whole-row pandas map took
+4.73 s on the wide rows). Both paths end in the shared failure matrix,
+``parse_common.apply_parser_options``.
 
 Capture aliases keep their ORIGINAL spelling in the output (internally each
 capture gets a unique synthetic group name ``gN``, sidestepping Java/Python
@@ -38,15 +44,17 @@ mongodb, nagios, postgresql, rails, redis, ruby, squid, bacula).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from loongcollector_spark.operators.grok_patterns import GROK_LIBRARY
+from loongcollector_spark.operators.parse_common import ParserOptions, apply_parser_options
 
 BUILTIN_PATTERNS: dict[str, str] = dict(GROK_LIBRARY)
 
@@ -54,6 +62,7 @@ _REF_RE = re.compile(r"%\{(\w+)(?::([\w.\-\[\]]+))?(?::(\w+))?\}")
 _NAMED_GROUP_RE = re.compile(r"\(\?<([A-Za-z][A-Za-z0-9]*)>")
 _SPARK_TYPES = {"int": "long", "long": "long", "float": "double", "double": "double"}
 _ARROW_CAPTURE_THRESHOLD = 6
+_HIDDEN = "__grok__"
 
 
 class GrokCycleError(ValueError):
@@ -162,10 +171,11 @@ def parse_grok(
     dictionary: dict[str, str] | None = None,
     ignore_parse_failure: bool = True,
     keep_source: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Try each grok pattern in order, first-match-wins
-    (processor_grok.go:105-173)."""
+    (processor_grok.go:105-173), then apply the shared failure matrix:
+    unmatched rows keep the source and every prior column; matched rows get
+    the winner's captures."""
     compiled = [compile_grok_full(p, dictionary) for p in match]
     # output field order: first appearance across the Match list
     all_keys: list[tuple[str, str]] = []
@@ -176,28 +186,42 @@ def parse_grok(
                 seen.add(c.alias)
                 all_keys.append((c.alias, c.spark_type))
 
-    if engine == "auto":
-        engine = (
-            "arrow"
-            if max((len(caps) for _, caps in compiled), default=0)
-            >= _ARROW_CAPTURE_THRESHOLD
-            else "jvm"
-        )
-    if engine == "arrow":
-        return _parse_grok_arrow(
-            df, source_key, compiled, all_keys, ignore_parse_failure, keep_source
-        )
+    widest = max((len(caps) for _, caps in compiled), default=0)
+    if widest >= _ARROW_CAPTURE_THRESHOLD:
+        out, win, values = _grok_arrow(df, source_key, compiled, all_keys)
+    else:
+        out, win, values = _grok_jvm(df, source_key, compiled, all_keys)
 
+    extracted = {}
+    for alias, typ in all_keys:
+        # try_cast: an empty/non-participating capture under a typed alias
+        # yields null instead of an ANSI cast error (the reference skips
+        # empty captures entirely)
+        extracted[alias] = values[alias] if typ == "string" else values[alias].try_cast(typ)
+    options = ParserOptions(
+        keep_source_on_fail=ignore_parse_failure, keep_source_on_success=keep_source
+    )
+    out = apply_parser_options(out, source_key, win >= 0, extracted, options)
+    return out.drop(_HIDDEN)
+
+
+def _grok_jvm(
+    df: DataFrame,
+    source_key: str,
+    compiled: Sequence[tuple[str, Sequence[GrokCapture]]],
+    all_keys: Sequence[tuple[str, str]],
+) -> tuple[DataFrame, Column, dict[str, Column]]:
+    """Few captures: one ``rlike`` per pattern + one ``regexp_extract`` per
+    capture, fused into whole-stage codegen. The winning pattern index lands
+    in one hidden column so each ``rlike`` runs once per row."""
     src = F.col(source_key)
-    match_cols = [src.isNotNull() & src.rlike(regex) for regex, _ in compiled]
-
     # first-match-wins is per ROW across the whole Match list: the winning
     # pattern supplies ALL captures; later patterns never run for that row
     # even for aliases the winner lacks (processor_grok.go:105-133 breaks
     # out of the loop on the first successful match)
     win: Column = F.lit(-1)
     for i in range(len(compiled) - 1, -1, -1):
-        win = F.when(match_cols[i], F.lit(i)).otherwise(win)
+        win = F.when(src.isNotNull() & src.rlike(compiled[i][0]), F.lit(i)).otherwise(win)
 
     # Java group NUMBERS follow group-OPEN order in the final regex, which
     # differs from capture-creation order when an aliased pattern nests
@@ -208,8 +232,9 @@ def parse_grok(
         for regex, _ in compiled
     ]
 
-    out = df.withColumn("__grok_win__", win)
-    for alias, typ in all_keys:
+    hidden = F.col(_HIDDEN)
+    values: dict[str, Column] = {}
+    for alias, _ in all_keys:
         expr: Column = F.lit(None).cast("string")
         for i in range(len(compiled) - 1, -1, -1):
             regex, caps = compiled[i]
@@ -230,58 +255,39 @@ def parse_grok(
                         ],
                         F.lit(""),
                     )
-                expr = F.when(F.col("__grok_win__") == i, val).otherwise(expr)
-        if typ != "string":
-            # try_cast: an empty/non-participating capture under a typed
-            # alias yields null instead of an ANSI cast error (the reference
-            # skips empty captures entirely)
-            expr = expr.try_cast(typ)
-        out = out.withColumn(alias, expr)
-    out = out.drop("__grok_win__")
-
-    any_match = match_cols[0]
-    for c in match_cols[1:]:
-        any_match = any_match | c
-    if not ignore_parse_failure:
-        out = out.filter(any_match)
-    if not keep_source:
-        out = out.withColumn(source_key, F.when(~any_match, src))
-    return out
+                expr = F.when(hidden == i, val).otherwise(expr)
+        values[alias] = expr
+    return df.withColumn(_HIDDEN, win), hidden, values
 
 
-def _parse_grok_arrow(
+def _grok_arrow(
     df: DataFrame,
     source_key: str,
     compiled: Sequence[tuple[str, Sequence[GrokCapture]]],
     all_keys: Sequence[tuple[str, str]],
-    ignore_parse_failure: bool,
-    keep_source: bool,
-) -> DataFrame:
-    """Single-pass vectorized grok: per pattern, ONE ``str.contains`` + ONE
-    ``str.extract`` over the rows no earlier pattern matched — the whole
-    Match list costs ~len(match) vectorized passes instead of (k+1) regex
-    scans per capture. Identical semantics to the JVM engine (winner supplies
-    all captures; non-participating groups of a matched row extract as "")."""
+) -> tuple[DataFrame, Column, dict[str, Column]]:
+    """Many captures: one scalar struct ``pandas_udf`` over the source column
+    only. Per pattern, ONE ``str.contains`` + ONE ``str.extract`` over the
+    rows no earlier pattern matched — the whole Match list costs ~len(match)
+    vectorized passes instead of (k+1) regex scans per row. Only the source
+    column crosses into Python; the rest of the row stays in the JVM, so the
+    cost does not grow with row width. Same semantics as the JVM path (winner
+    supplies all captures; non-participating groups of a matched row extract
+    as "")."""
     aliases = [a for a, _ in all_keys]
-    conflicts = [a for a in aliases if a in df.columns]
-    if source_key in aliases:
-        raise ValueError("grok alias may not equal source_key in arrow engine")
-    if conflicts:
-        df = df.drop(*conflicts)  # JVM path overwrites; same net effect
-
+    # synthetic struct field names: an alias may be any string, "win" too
+    fields = [f"c{j}" for j in range(len(aliases))]
     pyregexes = [re.compile(_to_python(regex)) for regex, _ in compiled]
     pattern_aliases = [
-        [([c.group for c in occ], a) for a, occ in _alias_occurrences(caps).items()]
+        [([c.group for c in occ], aliases.index(a)) for a, occ in _alias_occurrences(caps).items()]
         for _, caps in compiled
     ]
+    schema = StructType(
+        [StructField("win", IntegerType())] + [StructField(f, StringType()) for f in fields]
+    )
 
-    from pyspark.sql.types import IntegerType, StructField
-
-    from loongcollector_spark.operators.parse_common import extended_schema
-
-    schema = extended_schema(df, aliases, StructField("__grok_win__", IntegerType()))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf(schema)
+    def extract(s: pd.Series) -> pd.DataFrame:
         import warnings
 
         # str.contains with a grouped regex is exactly what we want here
@@ -289,56 +295,43 @@ def _parse_grok_arrow(
         warnings.filterwarnings(
             "ignore", message="This pattern is interpreted as a regular expression"
         )
-        for pdf in batches:
-            n = len(pdf)
-            s = pdf[source_key]
-            win = np.full(n, -1, dtype=np.int32)
-            out = {a: np.full(n, None, dtype=object) for a in aliases}
-            remaining = s.notna().to_numpy()
-            for i, creg in enumerate(pyregexes):
-                if not remaining.any():
-                    break
-                idx = np.nonzero(remaining)[0]
-                sub = s.iloc[idx]
-                hit = sub.str.contains(creg, na=False).to_numpy(dtype=bool)
-                if not hit.any():
-                    continue
-                hit_idx = idx[hit]
-                if pattern_aliases[i]:
-                    # str.extract raises on zero-capture regexes; a
-                    # capture-less pattern only consumes the rows (match test)
-                    ext = s.iloc[hit_idx].str.extract(creg)
-                    for gnames, alias in pattern_aliases[i]:
-                        # apply occurrences in order, skipping empty captures
-                        # (reference semantics): last non-empty wins, "" if
-                        # every occurrence is empty
-                        acc = np.full(len(hit_idx), "", dtype=object)
-                        for gname in gnames:
-                            vals = ext[gname].where(ext[gname].notna(), "").to_numpy(
-                                dtype=object
-                            )
-                            nonempty = vals != ""
-                            acc[nonempty] = vals[nonempty]
-                        out[alias][hit_idx] = acc
-                win[hit_idx] = i
-                remaining[hit_idx] = False
-            res = pdf.copy()
-            for a in aliases:
-                res[a] = out[a]
-            res["__grok_win__"] = win
-            yield res
+        n = len(s)
+        win = np.full(n, -1, dtype=np.int32)
+        out = [np.full(n, None, dtype=object) for _ in aliases]
+        remaining = s.notna().to_numpy()
+        for i, creg in enumerate(pyregexes):
+            if not remaining.any():
+                break
+            idx = np.nonzero(remaining)[0]
+            hit = s.iloc[idx].str.contains(creg, na=False).to_numpy(dtype=bool)
+            if not hit.any():
+                continue
+            hit_idx = idx[hit]
+            if pattern_aliases[i]:
+                # str.extract raises on zero-capture regexes; a capture-less
+                # pattern only consumes the rows (match test)
+                ext = s.iloc[hit_idx].str.extract(creg)
+                for gnames, j in pattern_aliases[i]:
+                    # apply occurrences in order, skipping empty captures
+                    # (reference semantics): last non-empty wins, "" if
+                    # every occurrence is empty
+                    acc = np.full(len(hit_idx), "", dtype=object)
+                    for gname in gnames:
+                        vals = ext[gname].where(ext[gname].notna(), "").to_numpy(dtype=object)
+                        nonempty = vals != ""
+                        acc[nonempty] = vals[nonempty]
+                    out[j][hit_idx] = acc
+            win[hit_idx] = i
+            remaining[hit_idx] = False
+        return pd.DataFrame({"win": win, **dict(zip(fields, out))})
 
-    parsed = df.mapInPandas(extract, schema=schema)
-    out = parsed
-    for alias, typ in all_keys:
-        if typ != "string":
-            out = out.withColumn(alias, F.col(alias).try_cast(typ))
-    any_match = F.col("__grok_win__") >= 0
-    if not ignore_parse_failure:
-        out = out.filter(any_match)
-    if not keep_source:
-        out = out.withColumn(source_key, F.when(~any_match, F.col(source_key)))
-    return out.drop("__grok_win__")
+    hidden = F.col(_HIDDEN)
+    values = {a: hidden.getField(f) for a, f in zip(aliases, fields)}
+    # nondeterministic only as an optimizer fence: a deterministic UDF lets
+    # the erase filter be pushed below this projection with the UDF inlined,
+    # which plans it twice (two ArrowEvalPython passes over the source)
+    udf = extract.asNondeterministic()
+    return df.withColumn(_HIDDEN, udf(F.col(source_key))), hidden.getField("win"), values
 
 
 def translate_onigmo(body: str) -> str:

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 RAW_LOG_KEY = "__raw_log__"
+_VERDICT = "__parse_ok__"
 
 
 @dataclass(frozen=True)
@@ -37,21 +38,6 @@ class ParserOptions:
         return not (self.keep_source_on_fail or self.copy_raw_log)
 
 
-def extended_schema(df: DataFrame, string_fields, extra_field=None):
-    """Output StructType for mapInPandas parsers: the input schema plus new
-    string fields (and one optional typed marker field). Built
-    programmatically — ``schema.simpleString()`` does not quote field names,
-    so DDL round-tripping breaks on columns like ``__tag__:__path__``."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    fields = list(df.schema.fields) + [
-        StructField(name, StringType()) for name in string_fields
-    ]
-    if extra_field is not None:
-        fields.append(extra_field)
-    return StructType(fields)
-
-
 def apply_parser_options(
     df: DataFrame,
     source_key: str,
@@ -62,36 +48,43 @@ def apply_parser_options(
     """Apply the parse-fail truth table around a parser's extracted columns.
 
     ``success`` is a boolean Column; ``extracted`` maps new column name ->
-    expression (evaluated only meaningfully when success holds).
+    expression (evaluated only meaningfully when success holds). The verdict
+    and every extracted column are evaluated against the INPUT row in one
+    projection, so a key that overwrites ``source_key`` (or any column an
+    expression reads) cannot change what later keys or the verdict see.
     """
-    out = df
+    ok, raw = F.col(_VERDICT), F.col(source_key)
+    if options.keep_source_on_success and options.keep_source_on_fail:
+        kept = raw
+    elif options.keep_source_on_success:
+        kept = F.when(ok, raw)
+    elif options.keep_source_on_fail:
+        kept = F.when(~ok, raw)
+    else:
+        kept = F.lit(None).cast(df.schema[source_key].dataType)
+    renamed = options.renamed_source_key not in (None, source_key)
+
+    cols: dict[str, Column] = {} if renamed else {source_key: kept}
     for name, expr in extracted.items():
-        if name in df.columns:
-            # chained parsers: only successful rows overwrite a key written
-            # by an earlier parser (reference parsers add contents on match
-            # only — failure leaves prior contents intact)
-            out = out.withColumn(name, F.when(success, expr).otherwise(F.col(name)))
+        # reference parsers add contents on match only: failure leaves a
+        # prior column intact, and a key that overwrites the source keeps
+        # its extracted value on success (the source is deleted only when
+        # the parse failed or no key overwrote it)
+        if name in cols:
+            cols[name] = F.when(ok, expr).otherwise(cols[name])
+        elif name in df.columns and name != source_key:
+            cols[name] = F.when(ok, expr).otherwise(F.col(name))
         else:
-            out = out.withColumn(name, F.when(success, expr))
-
+            cols[name] = F.when(ok, expr)
     if options.copy_raw_log:
-        out = out.withColumn(
-            RAW_LOG_KEY, F.when(~success, F.col(source_key))
-        )
+        cols[RAW_LOG_KEY] = F.when(~ok, raw)
+    if renamed:
+        cols[options.renamed_source_key] = kept
 
+    out = df.withColumn(_VERDICT, success)
     if options.should_erase_on_fail():
-        out = out.filter(success)
-    elif not options.keep_source_on_fail:
-        # failure rows survive only through __raw_log__; drop raw from source
-        out = out.withColumn(
-            source_key, F.when(success, F.col(source_key))
-        )
-
-    src = options.renamed_source_key or source_key
-    if not options.keep_source_on_success:
-        out = out.withColumn(src, F.when(~success, F.col(source_key)))
-        if src != source_key:
-            out = out.drop(source_key)
-    elif src != source_key:
-        out = out.withColumnRenamed(source_key, src)
-    return out
+        out = out.filter(ok)
+    out = out.withColumns(cols)
+    if renamed and source_key not in extracted:
+        out = out.drop(source_key)
+    return out.drop(_VERDICT)

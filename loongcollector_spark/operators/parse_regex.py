@@ -8,20 +8,19 @@ on mismatch apply the CommonParserOptions failure matrix; the ``(.*)``
 whole-line pattern takes a copy-through fast path; ``FullMatch`` toggles
 anchored matching.
 
-Spark-first: the default engine is pure JVM expressions — one ``rlike`` for
-the success predicate plus one ``regexp_extract`` per key, all fused by
+Spark-first: one path of pure JVM expressions — one ``rlike`` for the
+success predicate plus one ``regexp_extract`` per key, all fused by
 whole-stage codegen (regex compiled once per task by Catalyst, mirroring the
-reference's compile-at-Init). An Arrow engine (`engine="arrow"`) does a
-single-pass vectorized ``Series.str.extract`` for many-group patterns where
-one pass beats k JVM scans.
+reference's compile-at-Init). A vectorized Python ``str.extract`` engine was
+measured against it and removed: on 100k ``events`` rows of NGINX traffic
+(10 keys) it took 1.26 s narrow / 4.71 s with a 512-int payload per row,
+against 0.60 / 0.64 s for these expressions.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,7 +36,6 @@ def parse_regex(
     keys: Sequence[str],
     options: ParserOptions | None = None,
     full_match: bool = True,
-    engine: str = "jvm",
 ) -> DataFrame:
     options = options or ParserOptions()
 
@@ -47,9 +45,6 @@ def parse_regex(
             df, source_key, F.col(source_key).isNotNull(),
             {keys[0]: F.col(source_key)}, options,
         )
-
-    if engine == "arrow":
-        return _parse_regex_arrow(df, source_key, pattern, keys, options, full_match)
 
     anchored = pattern if not full_match else _anchor(pattern)
     src = F.col(source_key)
@@ -68,40 +63,3 @@ def _anchor(pattern: str) -> str:
         p = p + "$"
     return p
 
-
-def _parse_regex_arrow(
-    df: DataFrame,
-    source_key: str,
-    pattern: str,
-    keys: Sequence[str],
-    options: ParserOptions,
-    full_match: bool,
-) -> DataFrame:
-    """Single-pass vectorized extraction (Arrow batches, no per-row Python)."""
-    anchored = _anchor(pattern) if full_match else pattern
-    from pyspark.sql.types import BooleanType, StructField
-
-    from loongcollector_spark.operators.parse_common import extended_schema
-
-    schema = extended_schema(df, keys, StructField("__parse_ok__", BooleanType()))
-
-    compiled = re.compile(anchored)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            s = pdf[source_key]
-            ext = s.str.extract(compiled, expand=True)
-            ext.columns = list(keys)
-            ok = ext[keys[0]].notna() if len(keys) else s.notna()
-            res = pdf.copy()
-            for k in keys:
-                res[k] = ext[k]
-            res["__parse_ok__"] = ok.fillna(False)
-            yield res
-
-    parsed = df.mapInPandas(extract, schema=schema)
-    success = F.col("__parse_ok__")
-    out = apply_parser_options(
-        parsed, source_key, success, {k: F.col(k) for k in keys}, options
-    )
-    return out.drop("__parse_ok__")

@@ -4,6 +4,8 @@ from inline fixtures, run ONE operator, compare rows + failure semantics."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,27 @@ def lines_df(spark, *lines: str):
     return spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "id int, content string")
 
 
+@pytest.fixture(params=["jvm", "arrow"])
+def grok_path(request, monkeypatch):
+    """Force one of parse_grok's two extraction paths: the capture threshold
+    0 sends every pattern to the Arrow UDF, a huge one to JVM expressions."""
+    from loongcollector_spark.operators import grok
+
+    monkeypatch.setattr(grok, "_ARROW_CAPTURE_THRESHOLD", 0 if request.param == "arrow" else 10**9)
+    return request.param
+
+
+def grok_both_paths(monkeypatch, run):
+    """``run()`` under the JVM path, then under the Arrow path."""
+    from loongcollector_spark.operators import grok
+
+    out = []
+    for threshold in (10**9, 0):
+        monkeypatch.setattr(grok, "_ARROW_CAPTURE_THRESHOLD", threshold)
+        out.append(run())
+    return out
+
+
 # --- regex (ProcessorParseRegexNativeUnittest pattern) -----------------------
 
 NGINX = r'(\S+) - - \[([^\]]+)\] "(\S+) (\S+) ([^"]+)" (\d+) (\d+)'
@@ -29,11 +52,22 @@ GOOD = '::1 - - [18/Jul/2022:07:28:01 +0000] "GET /hello/loong HTTP/1.1" 404 153
 BAD = "not an access line"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_parse_regex_success(spark, engine):
-    df = parse_regex(lines_df(spark, GOOD), "content", NGINX, NGINX_KEYS, engine=engine, full_match=False)
+def test_parse_regex_success(spark):
+    df = parse_regex(lines_df(spark, GOOD), "content", NGINX, NGINX_KEYS, full_match=False)
     row = df.first()
     assert row.method == "GET" and row.url == "/hello/loong" and row.status == "404"
+
+
+def test_parse_regex_key_equal_to_source_key(spark):
+    # finding: the failure matrix wrote keys one withColumn at a time, so a
+    # key named like the source overwrote it before later captures and the
+    # verdict read it (msg came back NULL). Every capture and the verdict
+    # must read the input row.
+    df = parse_regex(lines_df(spark, "ERROR boom", "nothing"), "content", r"(ERROR) (.*)",
+                     ["content", "msg"])
+    rows = {r.id: r for r in df.collect()}
+    assert (rows[0].content, rows[0].msg) == ("ERROR", "boom")
+    assert (rows[1].content, rows[1].msg) == ("nothing", None)  # kept on fail
 
 
 def test_parse_regex_fail_keep_source(spark):
@@ -216,24 +250,31 @@ def test_grok_nested_pattern_group_indexing(spark):
     assert r.host == "10.1.2.3" and r.w == "hello"
 
 
-def test_grok_engines_equivalent(spark):
-    # jvm and arrow engines must agree row-for-row, including the "" vs null
-    # distinction (matched row + non-participating group -> "")
+def test_grok_engines_equivalent(spark, monkeypatch):
+    # the JVM and Arrow paths must agree row-for-row, including the "" vs
+    # null distinction (matched row + non-participating group -> ""), on
+    # wide rows (an array<int> payload stays in the JVM) and with a
+    # DDL-special column name
     lines = [
         '93.180.71.3 - frank [17/May/2015:08:05:32 +0000] "GET /x HTTP/1.1" 304 1200 "-" "curl/7.1"',
         '10.2.3.4 - - [17/May/2015:08:05:33 +0000] "HEAD /y.html HTTP/1.0" 200 - "r" "a"',
         "garbage line with no structure",
         None,
     ]
-    df = spark.createDataFrame([(i, l) for i, l in enumerate(lines)], "id long, content string")
-    from loongcollector_spark.operators.grok import parse_grok
+    df = spark.createDataFrame(
+        [(i, l, list(range(i * 512, (i + 1) * 512)), f"/var/log/{i}") for i, l in enumerate(lines)],
+        "id long, content string, payload array<int>, `__tag__:__path__` string",
+    )
 
-    a = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"], engine="jvm")
-    b = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"], engine="arrow")
-    ra = sorted([tuple(r) for r in a.collect()])
-    rb = sorted([tuple(r) for r in b.collect()])
-    assert a.columns == b.columns
+    def run():
+        out = parse_grok(df, "content", match=["%{COMBINEDAPACHELOG}"])
+        return out.columns, sorted(tuple(r) for r in out.collect())
+
+    (ca, ra), (cb, rb) = grok_both_paths(monkeypatch, run)
+    assert ca == cb
     assert ra == rb
+    assert ra[0][2] == list(range(512)) and ra[0][3] == "/var/log/0"
+    assert ra[0][ca.index("clientip")] == "93.180.71.3"
 
 
 def test_grok_library_breadth():
@@ -316,36 +357,60 @@ def test_prom_relabel_actions(spark):
     assert rows["scrape_duration"]["__labels__"] == "job#$#api"
 
 
-def test_grok_nested_alias_group_index(spark):
+def test_grok_nested_alias_group_index(spark, monkeypatch):
     # finding: nested aliased sub-patterns (URIHOST contains %{...:port})
-    # must map to the RIGHT regex group in the JVM engine — group numbers
-    # follow group-open order, not capture-creation order
+    # must map to the RIGHT regex group in the JVM path — group numbers
+    # follow group-open order, not capture-creation order; the Arrow path
+    # agrees
     df = lines_df(spark, "example.com:8080 GET")
-    out = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"],
-                     engine="jvm")
-    r = out.first()
-    assert r.hostport == "example.com:8080"
-    assert r.port == "8080"
-    assert r.verb == "GET"
-    # arrow engine agrees
-    r2 = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"],
-                    engine="arrow").first()
-    assert (r2.hostport, r2.port, r2.verb) == (r.hostport, r.port, r.verb)
+
+    def run():
+        r = parse_grok(df, "content", match=["%{URIHOST:hostport} %{WORD:verb}"]).first()
+        return r.hostport, r.port, r.verb
+
+    assert grok_both_paths(monkeypatch, run) == [("example.com:8080", "8080", "GET")] * 2
 
 
-def test_grok_captureless_pattern_arrow(spark):
+def test_grok_captureless_pattern_arrow(spark, monkeypatch):
     # a capture-less fallback pattern in the Match list must not crash the
-    # arrow engine (str.extract rejects zero-group regexes)
+    # Arrow path (str.extract rejects zero-group regexes); the JVM path agrees
     df = lines_df(spark, "2024-02-01T10:00:00Z bare timestamp line", "no match here")
-    out = parse_grok(
-        df, "content",
-        match=["%{IPORHOST:h} %{WORD:w} %{NOTSPACE:a} %{NOTSPACE:b} %{NOTSPACE:c} %{NOTSPACE:d}",
-               "%{TIMESTAMP_ISO8601}"],
-        engine="arrow",
+
+    def run():
+        out = parse_grok(
+            df, "content",
+            match=["%{IPORHOST:h} %{WORD:w} %{NOTSPACE:a} %{NOTSPACE:b} %{NOTSPACE:c} %{NOTSPACE:d}",
+                   "%{TIMESTAMP_ISO8601}"],
+        )
+        return sorted((r.id, r.h, r.content) for r in out.collect())
+
+    # matched by the capture-less pattern: no fields, source kept
+    want = [(0, None, "2024-02-01T10:00:00Z bare timestamp line"), (1, None, "no match here")]
+    assert grok_both_paths(monkeypatch, run) == [want, want]
+
+
+def test_grok_key_equal_to_source_key(spark, grok_path):
+    # finding: an alias named like the source overwrote it before the later
+    # captures read it (JVM path: msg came back "" and an unmatched line lost
+    # its source; Arrow path: refused the alias). Both paths now read the
+    # input row and keep the source on failure.
+    df = lines_df(spark, "ERROR boom", "nothing")
+    out = parse_grok(df, "content", match=["%{LOGLEVEL:content} %{GREEDYDATA:msg}"])
+    rows = {r.id: (r.content, r.msg) for r in out.collect()}
+    assert rows == {0: ("ERROR", "boom"), 1: ("nothing", None)}
+
+
+def test_grok_unmatched_keeps_prior_column(spark, grok_path):
+    # finding: an unmatched row erased a pre-existing column named like an
+    # alias; the reference adds contents only on a match
+    # (processor_grok.go:105-133), as parse_regex already did
+    df = spark.createDataFrame(
+        [(0, "no match 123", "prior1"), (1, "ERROR x", "prior2")],
+        "id int, content string, level string",
     )
-    rows = {r.id: r for r in out.collect()}
-    assert rows[0].h is None  # matched by the capture-less pattern: no fields
-    assert rows[1].h is None
+    out = parse_grok(df, "content", match=["%{LOGLEVEL:level} %{GREEDYDATA:msg}"])
+    rows = {r.id: (r.level, r.msg) for r in out.collect()}
+    assert rows == {0: ("prior1", None), 1: ("ERROR", "x")}
 
 
 def test_grok_arrow_with_special_column_names(spark):
@@ -438,22 +503,20 @@ _EXOTIC_CASES = [
 ]
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_exotic_family_headliners(spark, engine):
+def test_grok_exotic_family_headliners(spark, grok_path):
     """Each new pattern family (aws/squid/mongodb/junos/firewall/rails/ruby/
     redis/postgresql) extracts its contract fields on a representative line,
-    identically under both engines."""
+    identically under both extraction paths."""
     for pattern, line, expect in _EXOTIC_CASES:
         df = lines_df(spark, line)
-        out = parse_grok(df, "content", match=["%{" + pattern + "}"], engine=engine)
+        out = parse_grok(df, "content", match=["%{" + pattern + "}"])
         r = out.first()
         for field, want in expect.items():
             got = r[field]
-            assert got == want, f"{pattern}.{field}: {got!r} != {want!r} ({engine})"
+            assert got == want, f"{pattern}.{field}: {got!r} != {want!r} ({grok_path})"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_alternation_last_nonempty_alias(spark, engine):
+def test_grok_alternation_last_nonempty_alias(spark, grok_path):
     """NAGIOSLOGLINE: repeated aliases across alternation branches resolve to
     the last NON-EMPTY occurrence (processor_grok.go:146-153 skips empty
     captures) — a WARNING match must fill nagios_message even though later
@@ -463,7 +526,7 @@ def test_grok_alternation_last_nonempty_alias(spark, engine):
         "[1427925600] Warning: check timed out",
         "[1427925600] SERVICE ALERT: host1;http;CRITICAL;HARD;3;refused",
     )
-    out = parse_grok(df, "content", match=["%{NAGIOSLOGLINE}"], engine=engine)
+    out = parse_grok(df, "content", match=["%{NAGIOSLOGLINE}"])
     rows = out.orderBy("id").collect()
     assert rows[0]["nagios_message"] == "check timed out"
     assert rows[1]["nagios_type"] == "SERVICE ALERT"
@@ -473,8 +536,7 @@ def test_grok_alternation_last_nonempty_alias(spark, engine):
     assert rows[1]["nagios_message"] == "refused"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_grok_bind9_duplicate_alias(spark, engine):
+def test_grok_bind9_duplicate_alias(spark, grok_path):
     """BIND9 aliases `query` twice; last non-empty occurrence (the actual
     query) wins, matching the reference's ordered-append contract."""
     df = lines_df(
@@ -482,7 +544,7 @@ def test_grok_bind9_duplicate_alias(spark, engine):
         "17-Feb-2024 23:06:56 queries: info: client 192.0.2.55#1204 "
         "(foo.example): query: bar.example IN A (10.0.0.1)",
     )
-    out = parse_grok(df, "content", match=["%{BIND9}"], engine=engine)
+    out = parse_grok(df, "content", match=["%{BIND9}"])
     r = out.first()
     assert r["query"] == "bar.example"
     assert r["clientip"] == "192.0.2.55"
@@ -644,6 +706,72 @@ def test_grok_pattern_path_accepts_single_file():
     assert "SQUID3" in pats and len(pats) == 1
     with _pytest.raises(FileNotFoundError):
         load_pattern_dir("/nonexistent/pattern/path")
+
+
+GROK_FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures", "grok_patterns")
+
+
+def test_grok_pattern_dir_loads_fixture_bundle(spark, grok_path):
+    """CustomPatternDir on the repo's own two-file bundle: '"' lines are
+    comments, a name defined in both files takes the later file's body,
+    every name compiles under both regex dialects, and the multi-capture
+    composite parses a line end to end on both extraction paths."""
+    from loongcollector_spark.operators.grok import compile_grok_full, load_pattern_dir
+
+    pats = load_pattern_dir(GROK_FIXTURE_DIR)
+    assert sorted(pats) == ["SVC_BLOCK", "SVC_ID", "SVC_LEVEL", "SVC_LINE", "SVC_NAME", "SVC_TAG"]
+    assert pats["SVC_TAG"] == "second-file"
+    for name in pats:
+        compile_grok_full("%{" + name + "}", dictionary=pats)
+
+    df = lines_df(spark, "WARN 0123456789abcdef0123456789ABCDEF billing-api took=42ms", "no")
+    out = parse_grok(df, "content", match=["%{SVC_LINE}"], dictionary=pats)
+    rows = {r.id: r for r in out.collect()}
+    r = rows[0]
+    assert (r.level, r.request_id, r.service, r.took_ms) == (
+        "WARN", "0123456789abcdef0123456789ABCDEF", "billing-api", 42,
+    )
+    assert rows[1].level is None and rows[1].content == "no"
+
+
+def test_grok_onigmo_translation_semantics_fixture(spark):
+    """The load-time Onigmo translation preserves SEMANTICS: ``\\h`` is the
+    HEX class (``\\h{32}`` matches 32 hex digits, not 32 blanks) and a
+    mid-pattern ``(?m)`` means DOTALL, so a multi-line block matches."""
+    import re
+
+    from loongcollector_spark.operators.grok import load_pattern_dir, translate_onigmo
+
+    assert translate_onigmo(r"\h{2}") == "[0-9a-fA-F]{2}"
+    assert translate_onigmo(r"\H+") == "[^0-9a-fA-F]+"
+    assert translate_onigmo(r"\\h") == r"\\h"  # escaped backslash-h untouched
+    assert translate_onigmo(r"[\h-]") == "[0-9a-fA-F-]"  # in-class: class content
+    assert translate_onigmo(r"(?m)a.b") == "(?s:a.b)"
+    assert re.fullmatch(translate_onigmo(r"(?m)a.b"), "a\nb")
+
+    pats = load_pattern_dir(GROK_FIXTURE_DIR)
+    assert re.fullmatch(pats["SVC_ID"], "0123456789abcdefABCDEF0123456789")
+    assert not re.fullmatch(pats["SVC_ID"], " " * 32)
+    assert not re.fullmatch(pats["SVC_ID"], "g" * 32)
+
+    block = "begin ingest\nstep one\nstep two\nend"
+    df = spark.createDataFrame([(block,), ("begin ingest",)], "content string")
+    out = parse_grok(df, "content", match=["%{SVC_BLOCK}"], dictionary=pats)
+    assert sorted((r.content, r.block) for r in out.collect()) == [
+        ("begin ingest", None), (block, "ingest"),
+    ]
+
+
+def test_grok_pattern_path_accepts_single_file_fixture():
+    """CustomPatternDir pointing at one FILE loads only that file; a missing
+    path raises instead of silently loading nothing."""
+    from loongcollector_spark.operators.grok import load_pattern_dir
+
+    pats = load_pattern_dir(os.path.join(GROK_FIXTURE_DIR, "10-base"))
+    assert sorted(pats) == ["SVC_ID", "SVC_LEVEL", "SVC_NAME", "SVC_TAG"]
+    assert pats["SVC_TAG"] == "first-file"
+    with pytest.raises(FileNotFoundError):
+        load_pattern_dir(os.path.join(GROK_FIXTURE_DIR, "missing"))
 
 
 def test_key_value_expand_keys(spark):

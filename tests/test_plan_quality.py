@@ -91,6 +91,39 @@ def test_parse_chain_stays_in_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_grok_python_crossing_is_source_column_only(spark):
+    """Many-capture grok runs ONE scalar Arrow UDF whose only input is the
+    source column (the rest of the row never crosses into Python); few-
+    capture grok and parse_regex stay pure JVM expressions."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from loongcollector_spark.operators.grok import parse_grok
+    from loongcollector_spark.operators.parse_regex import parse_regex
+    from loongcollector_spark.sources.tables import load_table
+
+    ev = load_table(spark, SF, "events")
+    ev = ev.withColumn("logline", F.concat_ws(" ", "event_type", F.col("user_id").cast("string")))
+
+    many = _plan(parse_grok(ev, "logline", match=["%{COMBINEDAPACHELOG}"]))
+    assert many.count("ArrowEvalPython") == 1
+    assert "MapInPandas" not in many and "BatchEvalPython" not in many
+    (udf_args,) = re.findall(r"ArrowEvalPython \[\w+\((.*?)\)#\d+\]", many)
+    assert re.fullmatch(r"logline#\d+", udf_args), udf_args
+
+    # the erase filter must not plan the UDF a second time
+    erase = _plan(parse_grok(ev, "logline", match=["%{COMBINEDAPACHELOG}"],
+                             ignore_parse_failure=False))
+    assert erase.count("ArrowEvalPython") == 1
+
+    few = _plan(parse_grok(ev, "logline", match=["%{WORD:etype} %{INT:uid:int}"]))
+    regex = _plan(parse_regex(ev, "logline", r"(\w+) (\d+)", ["etype", "uid"]))
+    for plan in (few, regex):
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        assert "MapInPandas" not in plan and "Exchange" not in plan
+
+
 def test_token_pack_chunks_single_exchange(spark):
     """Per-shard packing must be ONE hash exchange: the window sorts inside
     the source partitioning and the (source, chunk_id) rollup reuses it —
